@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 from omniparser_spark.cdc.checkpoints import CheckpointStore
 from omniparser_spark.cdc.metrics import MetricsLog
 from omniparser_spark.lake.merge import merge_into
-from omniparser_spark.lake.table import LakeTable
+from omniparser_spark.lake.table import LakeTable, fixed_shape_job
 from omniparser_spark.operators.normalize import normalize_flagged, split_flagged
 
 TRANSCRIPTS_SCHEMA = T.StructType(
@@ -376,12 +376,6 @@ class CdcPipeline:
         tests and bench use the deterministic generator or a parquet
         slice — both are pure functions of the range).
         """
-        # AQE off for the apply loop: every shuffle otherwise becomes a
-        # separately-materialized query stage with a driver replan
-        # (~0.5s serial per batch). The loop's shapes are fully known
-        # (partition counts sized in session.py; skewed keys collapse
-        # in the merge's map-side partial agg), so AQE only adds
-        # latency here. Restored afterwards for ad-hoc queries.
         return self._drive(
             lambda s, e: (feed_for_range(s, e), None),
             total_events, batch_size, evolve_at_offset, evolved_columns,
@@ -399,11 +393,15 @@ class CdcPipeline:
         AQE toggle, checkpoint resume, evolve trigger, batch iteration.
         `make_slices(start, end)` -> (raw_slice, canon_slice_or_None)."""
         results: list[dict[str, Any]] = []
-        saved_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         offset = self.checkpoints.next_offset()
         batch_id = self.checkpoints.next_batch_id()
-        try:
+        # AQE off for the apply loop: every shuffle otherwise becomes a
+        # separately-materialized query stage with a driver replan
+        # (~0.5s serial per batch). The loop's shapes are fully known
+        # (partition counts sized in session.py; skewed keys collapse
+        # in the merge's map-side partial agg), so AQE only adds
+        # latency here. Restored afterwards for ad-hoc queries.
+        with fixed_shape_job(self.spark):
             while offset < total_events:
                 end = min(offset + batch_size - 1, total_events - 1)
                 if (
@@ -421,8 +419,6 @@ class CdcPipeline:
                 # un-applied tail must re-drive in THIS run
                 offset = int(rec["offset_end"]) + 1
                 batch_id += 1
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
         return results
 
     def run_feed(

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omniparser_spark.cdc.pipeline import CdcPipeline
+from omniparser_spark.lake.table import fixed_shape_job
 from omniparser_spark.operators.normalize import normalize_flagged
 
 
@@ -122,9 +123,8 @@ class RoutedPipeline:
         results: dict[str, list[dict[str, Any]]] = {n: [] for n in self.routes}
         canon_full = normalize_flagged(feed)  # ONE decode tree per run
 
-        saved_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        # AQE off for the routed loop, as in CdcPipeline._drive
+        with fixed_shape_job(self.spark):
             start = min(
                 pipe.checkpoints.next_offset() for pipe in self.pipes.values()
             )
@@ -224,8 +224,6 @@ class RoutedPipeline:
                 else:
                     stalls = 0
                 start = max(start, nxt)
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
         return results
 
     def read(self, name: str) -> DataFrame:

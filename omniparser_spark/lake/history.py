@@ -96,16 +96,11 @@ class HistorySink:
         # footprint (one key-only distinct, the same insurance pass
         # the merge runs): without this each history batch scans the
         # whole table twice
-        from omniparser_spark.lake.table import bucket_expr, fixed_shape_job
+        from omniparser_spark.lake.table import bucket_footprint
 
-        n_buckets = int(summary["n_buckets"])
-        with fixed_shape_job(changes.sparkSession):
-            touched = sorted(
-                int(r["_b"])
-                for r in changes.select(
-                    bucket_expr(summary["key_col"], n_buckets).alias("_b")
-                ).distinct().collect()
-            )
+        touched = bucket_footprint(
+            changes, summary["key_col"], int(summary["n_buckets"])
+        )
         # current version per affected key, with its fence position
         cur = (
             self.table.read(buckets=touched, include_hidden=True)

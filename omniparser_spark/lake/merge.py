@@ -30,9 +30,9 @@ Idempotency is layered:
 Scale shape: the local implementation prunes the target to the buckets
 the batch touches (file-level pruning via the bucket partition
 transform), unions *only those buckets* with the deduped batch and
-takes the per-key LWW winner with one map-side-combinable max_by
-aggregate (no sort-merge join, one shuffle), then rewrites only the
-touched buckets (COW), one data file per bucket. Per-batch merge cost
+takes the per-key LWW winner with one max_by aggregate on the
+bucket placement (no sort-merge join, one shuffle), then rewrites
+only the touched buckets (COW), one data file per bucket. Per-batch merge cost
 is therefore O(touched_buckets x avg_bucket_size) — it reduces to the
 batch's key footprint ONLY when n_buckets is sized so a typical batch
 touches a strict subset of buckets (see merge_into's cost-model note);
@@ -52,34 +52,10 @@ from pyspark.sql import types as T
 from omniparser_spark.lake.table import (
     LakeTable,
     bucket_expr,
-    fixed_shape_job,
+    bucket_footprint,
     place_exact_buckets,
-    repartition_exact_buckets,
 )
 
-
-def _one_shuffle_merge() -> bool:
-    """The merge's LWW aggregate and its exact-bucket placement can
-    share ONE shuffle: place the pre-aggregate rows by bucket salt,
-    then group by (salt, _bucket, *keys) — the salt and bucket are
-    functions of key_col ∈ keys, so the groups are identical, and
-    Catalyst sees the placement's HashPartitioning as satisfying the
-    aggregate's distribution (no second exchange). Saves a full
-    shuffle write+read of the merged output per batch. Escape hatch
-    for same-host A/B runs: SPARK_GRAFT_ONE_SHUFFLE_MERGE=0 restores
-    the two-shuffle plan (groupBy keys, then repartition).
-
-    Sizing note: under the one-shuffle plan the aggregate runs at
-    n_buckets-way parallelism (the placement's partition count), so a
-    table whose bucket count is far below the cluster's cores AND
-    whose batches are large under-parallelizes the LWW combine — at
-    scale n_buckets should exceed core count anyway (the bucket count
-    is the write/compaction unit), and an interleaved A/B on the
-    4-bucket view path measured parity, but if a small-bucket table
-    must take huge batches, flip the flag (or rescale_buckets)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_ONE_SHUFFLE_MERGE", "1") != "0"
 
 DEFAULT_KEYS = ("conv_id", "turn_idx")
 
@@ -136,7 +112,6 @@ def merge_into(
     keys: Sequence[str] | None = None,
     expected_rows: int | None = None,
     max_offset: int | None = None,
-    prune_exact: bool | None = None,
     observe_stats: bool = True,
     stage: bool = False,
     mode: str = "cow",
@@ -164,43 +139,51 @@ def merge_into(
       :meth:`LakeTable.compact_buckets` folds them. Right for
       high-frequency tailing at 10^10-event scale, where COW's
       per-batch rewrite of every touched bucket is the write
-      amplification that dominates the bill. `expected_rows` /
-      `prune_exact` are ignored (there is nothing to prune — the
-      batch's own buckets are discovered from the written files).
+      amplification that dominates the bill. `expected_rows` is
+      ignored (there is nothing to prune — the batch's own buckets are
+      discovered from the written files).
 
-    Cost model (COW): the merge reads and rewrites every *touched*
-    bucket in full, so per-batch cost is O(touched_buckets x
-    avg_bucket_size). Pruning to the batch's actual buckets is what
-    bounds that by the batch's key footprint. For R uniformly hashed
-    KEYS (not rows — a 250k-event batch over 5k hot conversations has
-    R=5k) over B buckets the expected touched count is
-    B(1 - exp(-R/B)): essentially all once R >~ 3B. Hence:
+    Each mode has ONE plan: the LWW aggregate runs on the exact-bucket
+    placement's partitioning (:func:`place_exact_buckets` — group by
+    (salt, _bucket, *keys); salt and bucket are functions of the key,
+    so the groups are unchanged and Catalyst reuses the placement's
+    HashPartitioning), so dedupe and one-file-per-bucket placement
+    share a single shuffle (decided by same-host A/B: 0.894x/0.914x
+    COW, 0.912x MOR, BASELINE.md). Sizing note: the aggregate
+    therefore runs at touched-bucket parallelism, so a table whose
+    bucket count is far below the cluster's cores AND whose batches
+    are huge under-parallelizes the LWW combine — the remedy is
+    :meth:`LakeTable.rescale_buckets`, not a second plan.
 
-    - `prune_exact=None` (auto): run the exact distinct-buckets job.
-      The risk is asymmetric — the job is a KEY-ONLY pass over the
-      batch (column pruning reaches the scan: `_bucket` needs just the
-      key column, so per-format payload decode reduces to one field),
-      while skipping it forces touched=ALL, O(table) read+rewrite per
-      batch; at 100 TB the insurance is orders of magnitude cheaper
-      than the downside, and row counts are a bad proxy for key counts
-      on hot-key CDC feeds (round-2 verdict: the old
-      `expected_rows < 3B` auto rule made every default-config batch a
+    `touched_buckets` is the only prune input:
+
+    - ``None`` (default): the automatic exact prune. COW runs a
+      KEY-ONLY distinct-buckets job over the batch
+      (:func:`bucket_footprint`); skipping it would force touched=ALL,
+      O(table) read+rewrite per batch, and row counts are a bad proxy
+      for key counts on hot-key CDC feeds (round-2 verdict: the old
+      `expected_rows < 3B` rule made every default-config batch a
       full-table rewrite). The only carve-out: `expected_rows` >=
       3 x n_buckets AND the table holds at most ~4 batches of events
       (proxied by `max_offset_applied`) — bootstrap loads, where the
       full rewrite costs the same order as the batch scan, so pruning
-      cannot pay for itself.
-    - `prune_exact=False`: caller asserts the batch spans ~all buckets
-      (e.g. uniform backfill replays) — skips the distinct job.
-    - At deployment, size `n_buckets` so a steady-state batch's key
-      footprint stays well under it (buckets ~ table_rows /
-      target_bucket_rows, :func:`derive_n_buckets`); a B sized to the
-      *table* keeps per-batch merge cost O(batch keys x bucket size),
-      not O(table).
+      cannot pay for itself. MOR places deltas over all buckets.
+    - a sequence: the caller's COVER of the batch's buckets (HistorySink
+      and the view syncs already collected it for their own pruned
+      reads). COW reads and rewrites exactly those buckets with no
+      distinct job; MOR places the delta over them. A superset is
+      sound — a rewritten bucket the batch misses carries through the
+      LWW union unchanged. A subset is NOT: under COW the missed
+      buckets' batch rows would be dropped.
 
-    Rewriting a bucket the batch happens to miss is still correct (its
-    content is carried through the LWW union unchanged) — pruning is a
-    pure cost optimization, never a correctness gate.
+    Cost model (COW): the merge reads and rewrites every *touched*
+    bucket in full, so per-batch cost is O(touched_buckets x
+    avg_bucket_size). For R uniformly hashed KEYS (not rows — a
+    250k-event batch over 5k hot conversations has R=5k) over B
+    buckets the expected touched count is B(1 - exp(-R/B)):
+    essentially all once R >~ 3B. At deployment, size `n_buckets` so a
+    steady-state batch's key footprint stays well under it (buckets ~
+    table_rows / target_bucket_rows, :func:`derive_n_buckets`).
 
     `max_offset` is caller-known bookkeeping (offset range bound) —
     passed in rather than computed with an extra action.
@@ -241,23 +224,29 @@ def merge_into(
         f.name for f in schema.fields
         if f.name not in keys and not f.name.startswith("_")
     ]
+    cover = (
+        sorted({int(b) for b in touched_buckets})
+        if touched_buckets is not None
+        else None
+    )
+    max_applied = max(
+        int(summary.get("max_offset_applied", -1)),
+        int(max_offset if max_offset is not None else -1),
+    )
 
     # align batch to table schema: NULL-fill columns the batch lacks
     for f in schema.fields:
         if f.name not in batch.columns and not f.name.startswith("_"):
             batch = batch.withColumn(f.name, F.lit(None).cast(f.dataType))
 
-    batch = batch.withColumn("_bucket", bucket_expr(key_col, n_buckets))
-
     if mode not in ("cow", "mor"):
         raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
     if mode == "mor":
-        # LWW-dedupe the batch per key (one O(batch) shuffle, same
-        # max_by winner rule as the COW union — the table row is NOT
-        # read; the read-time resolve supplies that comparison), then
-        # co-locate per bucket so each delta commit writes one file
-        # per touched bucket (second O(batch) shuffle; still zero
-        # table I/O).
+        # LWW-dedupe the batch per key (same max_by winner rule as the
+        # COW union — the table row is NOT read; the read-time resolve
+        # supplies that comparison), aggregated in place on the
+        # per-bucket placement so each delta commit writes one file per
+        # touched bucket: one O(batch) shuffle, zero table I/O.
         payload = F.struct(
             *data_cols,
             F.col("offset").cast("long").alias("_last_offset"),
@@ -265,31 +254,20 @@ def merge_into(
         )
         order = F.struct(F.col("ts"), F.col("offset").cast("long"))
         out_cols = [*data_cols, "_last_offset", "_deleted"]
-        if _one_shuffle_merge():
-            # place first, aggregate in place: the LWW dedupe and the
-            # per-bucket placement share one shuffle (see
-            # _one_shuffle_merge). `_bucket` is already on `batch`.
-            placed, extra = place_exact_buckets(batch, n_buckets)
-            gcols = list(dict.fromkeys([*extra, "_bucket", *keys]))
-            delta = (
-                placed.groupBy(*gcols)
-                .agg(F.max_by(payload, order).alias("_w"))
-                .select(
-                    "_bucket",
-                    *keys,
-                    *[F.col(f"_w.{c}").alias(c) for c in out_cols],
-                )
+        placed, extra = place_exact_buckets(
+            batch.withColumn("_bucket", bucket_expr(key_col, n_buckets)),
+            cover or n_buckets,
+        )
+        gcols = list(dict.fromkeys([*extra, "_bucket", *keys]))
+        delta = (
+            placed.groupBy(*gcols)
+            .agg(F.max_by(payload, order).alias("_w"))
+            .select(
+                "_bucket",
+                *keys,
+                *[F.col(f"_w.{c}").alias(c) for c in out_cols],
             )
-        else:
-            delta = (
-                batch.groupBy(*keys)
-                .agg(F.max_by(payload, order).alias("_w"))
-                .select(
-                    *keys, *[F.col(f"_w.{c}").alias(c) for c in out_cols]
-                )
-                .withColumn("_bucket", bucket_expr(key_col, n_buckets))
-            )
-            delta = repartition_exact_buckets(delta, n_buckets)
+        )
         obs = None
         if observe_stats:
             from pyspark.sql import Observation
@@ -307,10 +285,7 @@ def merge_into(
             delta,
             summary_updates={
                 "batch_id": batch_id,
-                "max_offset_applied": max(
-                    int(summary.get("max_offset_applied", -1)),
-                    int(max_offset if max_offset is not None else -1),
-                ),
+                "max_offset_applied": max_applied,
             },
             stage=stage,
             stats_upper_bound=max_offset,
@@ -336,68 +311,29 @@ def merge_into(
             ),
         }
 
-    if touched_buckets is not None:
-        # caller-known bucket footprint (HistorySink, the view syncs:
-        # they already ran a key-only distinct for their OWN pruned
-        # reads — re-collecting the same set here would be a second
-        # full pass over the batch). A SUPERSET is sound: rewriting a
-        # bucket the batch misses carries its content through the LWW
-        # union unchanged (the documented prune contract); a subset
-        # would lose rows, so callers must pass a cover of the batch's
-        # keys.
-        prune_exact = False
-        touched_override = sorted({int(b) for b in touched_buckets})
+    if cover is not None:
+        touched = cover
     else:
-        touched_override = None
-    if prune_exact is None:
         # asymmetric risk: exact pruning costs O(batch); skipping it
         # costs O(table) when the batch's keys are concentrated. Only
-        # skip during bootstrap (table still <= ~2 batches of events —
-        # proxied by max_offset_applied, an upper bound on events
-        # absorbed so far) with a uniform-looking batch, where the
-        # full rewrite is inevitable AND cheap.
-        # OMNIPARSER_PRUNE_MODE overrides the auto rule per deployment:
-        # "always"/"never" for operators who know their feed's key
-        # distribution, "legacy" = the pre-round-3 rows<3B rule (bench
-        # comparisons).
-        import os as _os
-
-        # NB: named prune_mode, not mode — `mode` is this function's
-        # cow/mor merge-strategy parameter
-        prune_mode = _os.environ.get("OMNIPARSER_PRUNE_MODE", "auto")
+        # skip during bootstrap — the table holds at most ~4 batches of
+        # events (max_offset_applied is an upper bound on events
+        # absorbed so far) — with a uniform-looking batch, where the
+        # full rewrite is inevitable AND cheap. Beyond that the
+        # table-vs-batch ratio (and the saving) only grows.
         uniform_batch = (
             expected_rows is not None and expected_rows >= 3 * n_buckets
         )
-        if prune_mode == "always":
-            prune_exact = n_buckets > 1
-        elif prune_mode == "never":
-            prune_exact = False
-        elif prune_mode == "legacy":
-            prune_exact = not uniform_batch
+        events_so_far = int(summary.get("max_offset_applied", -1)) + 1
+        bootstrap = events_so_far <= 4 * (expected_rows or 0)
+        if n_buckets > 1 and not (uniform_batch and bootstrap):
+            # NO persist: caching the decoded batch costs more than it
+            # saves (cache write + losing whole-stage codegen on the
+            # InMemoryRelation read measurably beat the re-decode —
+            # round-3 scaling A/B)
+            touched = bucket_footprint(batch, key_col, n_buckets)
         else:
-            # "bootstrap" = the table holds at most ~4 batches of
-            # events: rewriting it costs the same order as scanning the
-            # batch, so pruning can't pay for its extra pass. Beyond
-            # that the table-vs-batch ratio (and the saving) only grows.
-            events_so_far = int(summary.get("max_offset_applied", -1)) + 1
-            bootstrap = events_so_far <= 4 * (expected_rows or 0)
-            prune_exact = n_buckets > 1 and not (uniform_batch and bootstrap)
-    if prune_exact:
-        # NO persist: caching the decoded batch costs more than it
-        # saves (cache write + losing whole-stage codegen on the
-        # InMemoryRelation read measurably beat the re-decode —
-        # round-3 scaling A/B). Column pruning makes this distinct a
-        # key-only pass: `_bucket` needs just the key column, so the
-        # scan decodes one field, not the whole payload schema.
-        with fixed_shape_job(batch.sparkSession):
-            touched = sorted(
-                int(r["_bucket"])
-                for r in batch.select("_bucket").distinct().collect()
-            )
-    elif touched_override is not None:
-        touched = touched_override
-    else:
-        touched = list(range(n_buckets))
+            touched = list(range(n_buckets))
     target = table.read(
         buckets=touched, include_hidden=True, version=base_snap.version
     )
@@ -411,10 +347,10 @@ def merge_into(
     # (s.ts, s.offset) > (t.ts, t._last_offset)" is exactly the LWW
     # winner under the total order (ts, _last_offset) with the target
     # preferred at exact ties (equal = same event re-delivered -> no-op;
-    # idempotency at row granularity). One hash-shuffle with map-side
-    # combine, no sort — cheaper than a full-outer sort-merge join and
-    # identical semantics: per key there is at most one target row
-    # (table is key-unique) and one batch row (LWW-deduped upstream).
+    # idempotency at row granularity). One hash-shuffle, no sort —
+    # cheaper than a full-outer sort-merge join and identical
+    # semantics: per key there is at most one target row (table is
+    # key-unique) and one batch row (LWW-deduped upstream).
     t = target.select(
         *keys,
         *data_cols,
@@ -431,42 +367,24 @@ def merge_into(
         (F.col("op") == "D").alias("_deleted"),
         F.lit(0).alias("_pref"),
     )
-    u = t.unionByName(s)
+    u = t.unionByName(s).withColumn("_bucket", bucket_expr(key_col, n_buckets))
     payload = F.struct(*data_cols, "_last_offset", "_deleted")
     order = F.struct(F.col("ts"), F.col("_last_offset"), F.col("_pref"))
-    def sel(df: DataFrame, *head: str) -> DataFrame:
-        """Winner projection shared by both plan shapes; `head` carries
-        group-key columns (e.g. _bucket) straight through."""
-        return df.select(
-            *head,
-            *keys,
-            *[F.col(f"_w.{c}").alias(c) for c in data_cols],
-            F.col("_w._last_offset").alias("_last_offset"),
-            F.col("_w._deleted").alias("_deleted"),
-        )
-    # one data file per touched bucket: co-locate each bucket's rows in
-    # a single partition before partitionBy, else every reduce task
-    # writes a sliver into every bucket dir (tasks x buckets small
-    # files; measured 1024 files/commit at 32x32)
-    if _one_shuffle_merge():
-        # place the UNION by bucket salt first, then aggregate in
-        # place: LWW dedupe + placement in one shuffle (see
-        # _one_shuffle_merge)
-        u = u.withColumn("_bucket", bucket_expr(key_col, n_buckets))
-        placed, extra = place_exact_buckets(u, touched)
-        gcols = list(dict.fromkeys([*extra, "_bucket", *keys]))
-        merged = sel(
-            placed.groupBy(*gcols).agg(F.max_by(payload, order).alias("_w")),
-            "_bucket",
-        )
-    else:
-        merged = sel(
-            u.groupBy(*keys).agg(F.max_by(payload, order).alias("_w"))
-        )
-        merged = repartition_exact_buckets(
-            merged.withColumn("_bucket", bucket_expr(key_col, n_buckets)),
-            touched,
-        )
+    # one data file per touched bucket: place the UNION by bucket salt
+    # (each bucket's rows in a single partition before partitionBy,
+    # else every reduce task writes a sliver into every bucket dir —
+    # measured 1024 files/commit at 32x32), then aggregate in place
+    placed, extra = place_exact_buckets(u, touched)
+    gcols = list(dict.fromkeys([*extra, "_bucket", *keys]))
+    merged = placed.groupBy(*gcols).agg(
+        F.max_by(payload, order).alias("_w")
+    ).select(
+        "_bucket",
+        *keys,
+        *[F.col(f"_w.{c}").alias(c) for c in data_cols],
+        F.col("_w._last_offset").alias("_last_offset"),
+        F.col("_w._deleted").alias("_deleted"),
+    )
 
     # observe applied-row stats on the commit write itself (no extra
     # action): rows_written = post-merge row count of the touched
@@ -489,10 +407,7 @@ def merge_into(
         touched_buckets=touched,
         summary_updates={
             "batch_id": batch_id,
-            "max_offset_applied": max(
-                int(summary.get("max_offset_applied", -1)),
-                int(max_offset if max_offset is not None else -1),
-            ),
+            "max_offset_applied": max_applied,
         },
         stage=stage,
         # changelog pruning stats: every rewritten bucket's max
@@ -500,7 +415,7 @@ def merge_into(
         # for free, no extra scan (untouched buckets carry theirs)
         bucket_stats_updates=(
             {b: int(max_offset) for b in touched}
-            if max_offset is not None and touched is not None
+            if max_offset is not None
             else None
         ),
         base=base_snap,

@@ -119,10 +119,6 @@ def place_exact_buckets(
         # a single partition satisfies every distribution — downstream
         # groupBys already run exchange-free with no extra key
         return df.repartition(1), []
-    if os.environ.get("SPARK_GRAFT_EXACT_PLACEMENT", "1") == "0":
-        # A/B escape hatch: the pre-fix hash placement (collision
-        # stragglers and all), for same-host comparison runs
-        return df.repartition(n, bucket_col), [bucket_col]
     salts = _partition_salts(n)
     mapping = F.create_map(
         *[
@@ -164,20 +160,38 @@ def bucket_expr(key_col: str | Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(c.cast("string")), F.lit(n_buckets)).cast("int")
 
 
+def bucket_footprint(df: DataFrame, key_col: str, n_buckets: int) -> list[int]:
+    """The sorted bucket ids `df`'s `key_col` values hash into: one
+    bounded distinct-collect (at most `n_buckets` ints). Column pruning
+    makes it a key-only pass — `bucket_expr` needs just the key column,
+    so a decoded payload scan reduces to one field."""
+    with fixed_shape_job(df.sparkSession):
+        return sorted(
+            int(r["_b"])
+            for r in df.select(bucket_expr(key_col, n_buckets).alias("_b"))
+            .distinct()
+            .collect()
+        )
+
+
 @contextlib.contextmanager
 def fixed_shape_job(spark):
-    """Run an action with AQE off: the commit write's output
-    partitioning is PINNED by exact bucket placement (one shuffle
-    partition per touched bucket — a user-specified partition count AQE
+    """Turn AQE off for the enclosed block: every action planned inside
+    it runs its WHOLE plan non-adaptively — not only the fixed-shape
+    stage that motivates it. Used around commit writes and bucket-prune
+    collects, whose output partitioning is PINNED by exact bucket
+    placement (one shuffle partition per touched bucket — a count AQE
     must not coalesce, and bucket dirs AQE skew-split must not break),
-    so adaptive re-planning cannot improve the job at any scale — it
-    only adds its per-query-stage re-optimization latency (measured
-    ~0.25-0.3 s per action at local[32], the dominant slice of the
-    per-commit serial floor that caps multi-batch lifecycle queries).
-    Same reasoning covers the bucket-prune distinct collect: a key-only
-    scan into a bounded int list.  Scale note: this scopes ONLY the
-    fixed-shape commit/prune actions — reads, joins, and every declared
-    query keep AQE (skew joins, partition coalescing) untouched."""
+    so adaptive re-planning only adds its per-query-stage latency
+    (measured ~0.25-0.3 s per action at local[32]); the CDC driver
+    loops wrap a whole batch sequence the same way. A no-op when AQE is
+    already off, so scopes nest.
+
+    The flag is SESSION-GLOBAL conf: this assumes one driver thread
+    uses the session while the block runs. A query on another thread
+    sharing the session (e.g. a streaming foreachBatch) plans without
+    AQE meanwhile, and the restore can race with that thread's own
+    scope."""
     key = "spark.sql.adaptive.enabled"
     try:
         prev = spark.conf.get(key)

@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omniparser_spark.lake.merge import merge_into
-from omniparser_spark.lake.table import LakeTable
+from omniparser_spark.lake.table import LakeTable, bucket_footprint
 
 # metrics are expressed once and evaluated against BOTH images: the
 # callable receives a getter mapping a source column name to a Column
@@ -224,28 +224,6 @@ def create_rollup_view(
     return view
 
 
-def _touched_view_buckets(
-    changed: DataFrame, group_col: str, n_buckets: int
-) -> list[int]:
-    """The sorted view-bucket ids the window's changed groups hash
-    into — a bounded distinct-collect (at most `n_buckets` ints) that
-    lets a sync read only the stored view's touched bucket files.
-    `group_col` is a merge key of the source, so a changed row's group
-    is identical in pre and post image and the changelog's post-image
-    group column covers every touched group (including deletes)."""
-    from omniparser_spark.lake.table import bucket_expr, fixed_shape_job
-
-    with fixed_shape_job(changed.sparkSession):
-        return sorted(
-            int(r["_b"])
-            for r in changed.select(
-                bucket_expr(group_col, n_buckets).alias("_b")
-            )
-            .distinct()
-            .collect()
-        )
-
-
 def sync_rollup_view(
     table: LakeTable,
     view: LakeTable,
@@ -316,7 +294,10 @@ def sync_rollup_view(
     # is bounded by the view's n_buckets (a handful of ints). This is
     # per-micro-batch cost since the streaming after_epoch hook, so an
     # unpruned read here is the named scale-killer class (r6 verdict).
-    touched = _touched_view_buckets(
+    # `group_col` is a merge key of the source, so a changed row's group
+    # is identical in pre and post image and the changelog's post-image
+    # group column covers every touched group (including deletes)
+    touched = bucket_footprint(
         table.changes_between_versions(from_version, to_v),
         group_col,
         int(vsum["n_buckets"]),
@@ -362,7 +343,7 @@ def sync_rollup_view(
         # rides on work the join already does
         src_sum = table.summary()
         if group_col == src_sum.get("key_col"):
-            rescan_buckets = _touched_view_buckets(
+            rescan_buckets = bucket_footprint(
                 rescan_keys, group_col, int(src_sum["n_buckets"])
             )
             src_at = table.read(version=to_v, buckets=rescan_buckets)
@@ -562,7 +543,7 @@ def sync_hll_view(
     # registers are grow-only, so delete-only groups need no touch at
     # all — prune the bucket set to groups with surviving post-images
     # (vals), then read only those stored-view bucket files
-    touched = _touched_view_buckets(
+    touched = bucket_footprint(
         vals, group_col, int(vsum["n_buckets"])
     )
     old = view.read(buckets=touched).select(

@@ -84,16 +84,11 @@ class DedupRegistry:
         )
         # registry lookup, bucket-pruned to the batch's hash footprint
         summary = self.table.summary()
-        from omniparser_spark.lake.table import bucket_expr, fixed_shape_job
+        from omniparser_spark.lake.table import bucket_footprint
 
-        with fixed_shape_job(hashed.sparkSession):
-            touched = sorted(
-                int(r["_b"])
-                for r in hashed.select(
-                    bucket_expr("content_hash", int(summary["n_buckets"]))
-                    .alias("_b")
-                ).distinct().collect()
-            )
+        touched = bucket_footprint(
+            hashed, "content_hash", int(summary["n_buckets"])
+        )
         seen = self.table.read(buckets=touched).select(
             "content_hash",
             F.col("canonical_id").alias("_reg_canon"),
@@ -300,22 +295,14 @@ class NearDupRegistry:
         against the registry state BEFORE this batch's insertion (read
         pins the snapshot), so re-running a fenced batch returns the
         same pairs without duplicating index rows."""
-        from omniparser_spark.lake.table import bucket_expr
+        from omniparser_spark.lake.table import bucket_footprint
 
         new = self._banded(batch, id_col, text_col).persist()
         try:
             summary = self.table.summary()
-            from omniparser_spark.lake.table import fixed_shape_job
-
-            with fixed_shape_job(new.sparkSession):
-                touched = sorted(
-                    int(r["_b"])
-                    for r in new.select(
-                        bucket_expr(
-                            "band_key", int(summary["n_buckets"])
-                        ).alias("_b")
-                    ).distinct().collect()
-                )
+            touched = bucket_footprint(
+                new, "band_key", int(summary["n_buckets"])
+            )
             old = self.table.read(buckets=touched).join(
                 new.select("band_key").distinct(), "band_key", "leftsemi"
             )

@@ -184,40 +184,34 @@ def test_repartition_exact_buckets_one_per_partition(spark):
 
 
 def test_caller_supplied_touched_buckets(spark, tmp_path):
-    """`touched_buckets=` (round 8): the merge skips its own key-only
-    distinct job and trusts the caller's bucket cover. A SUPERSET is
+    """`touched_buckets=` is the caller's bucket cover, honoured in both
+    merge modes: COW skips its own key-only distinct job and rewrites
+    exactly the cover, MOR places the delta over it. A SUPERSET is
     sound (an extra rewritten bucket carries through the LWW union
-    unchanged) and final state must be byte-identical to the
-    self-pruned merge."""
-    from omniparser_spark.lake.table import bucket_expr
+    unchanged) and final state must be identical to the self-pruned
+    merge."""
+    from omniparser_spark.lake.table import bucket_footprint
 
-    def build(path, touched_for_second):
+    hot_keys = [f"c{i}" for i in range(7)]
+    hot_buckets = bucket_footprint(
+        spark.createDataFrame([(k,) for k in hot_keys], "conv_id string"),
+        "conv_id",
+        16,
+    )
+
+    def build(path, touched_for_second, mode):
         t = LakeTable.create(
             spark, str(tmp_path / path), SCHEMA, key_col="conv_id",
             n_buckets=16, merge_keys=("conv_id", "turn_idx"),
         )
         boot = [(f"c{i}", 1, i) for i in range(400)]
         merge_into(t, _batch(spark, boot), batch_id=0,
-                   expected_rows=400, max_offset=399)
+                   expected_rows=400, max_offset=399, mode=mode)
         hot = [(f"c{i}", 2, 400 + i) for i in range(7)]
-        merge_into(t, _batch(spark, hot), batch_id=1,
-                   expected_rows=7, max_offset=406,
-                   touched_buckets=touched_for_second)
-        return t
-
-    hot_keys = [f"c{i}" for i in range(7)]
-    hot_buckets = sorted(
-        {
-            r["_b"]
-            for r in spark.createDataFrame(
-                [(k,) for k in hot_keys], "conv_id string"
-            ).select(bucket_expr("conv_id", 16).alias("_b")).collect()
-        }
-    )
-    # exact cover, a strict superset, and the self-pruned control
-    t_exact = build("exact", hot_buckets)
-    t_super = build("super", sorted(set(hot_buckets) | {0, 1, 2, 3}))
-    t_ctrl = build("ctrl", None)
+        rec = merge_into(t, _batch(spark, hot), batch_id=1,
+                         expected_rows=7, max_offset=406, mode=mode,
+                         touched_buckets=touched_for_second)
+        return t, rec
 
     def state(t):
         return sorted(
@@ -225,10 +219,38 @@ def test_caller_supplied_touched_buckets(spark, tmp_path):
             for r in t.read().collect()
         )
 
-    ref = state(t_ctrl)
-    assert len(ref) == 407
-    assert state(t_exact) == ref
-    assert state(t_super) == ref
+    superset = sorted(set(hot_buckets) | {0, 1, 2, 3})
+    for mode in ("cow", "mor"):
+        # exact cover, a strict superset, and the self-pruned control
+        t_exact, r_exact = build(f"{mode}_exact", hot_buckets, mode)
+        t_super, r_super = build(f"{mode}_super", superset, mode)
+        t_ctrl, r_ctrl = build(f"{mode}_ctrl", None, mode)
+
+        ref = state(t_ctrl)
+        assert len(ref) == 407
+        assert state(t_exact) == ref
+        assert state(t_super) == ref
+        assert r_ctrl["touched_buckets"] == hot_buckets
+        assert r_exact["touched_buckets"] == hot_buckets
+        # COW rewrites the whole cover; MOR writes deltas only where
+        # the batch has rows
+        assert r_super["touched_buckets"] == (
+            superset if mode == "cow" else hot_buckets
+        )
+
+
+def test_lake_reads_no_env_vars():
+    """Merge plans and prune rules are code, not deployment flags: no
+    module under lake/ reads the process environment."""
+    import pathlib
+
+    import omniparser_spark.lake as lake
+
+    sources = sorted(pathlib.Path(lake.__file__).parent.glob("*.py"))
+    assert sources
+    for src in sources:
+        text = src.read_text()
+        assert "os.environ" not in text and "getenv" not in text, src.name
 
 
 def test_fixed_shape_job_restores_conf(spark):

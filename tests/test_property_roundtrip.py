@@ -176,11 +176,17 @@ def _slice_fixture(spark, tmp_path_factory):
     cuts=st.lists(
         st.integers(min_value=1, max_value=399), min_size=0, max_size=6,
         unique=True,
-    )
+    ),
+    mode=st.sampled_from(["cow", "mor"]),
 )
 def test_final_state_invariant_to_batch_slicing(
-    spark, tmp_path_factory, cuts
+    spark, tmp_path_factory, cuts, mode
 ):
+    """For arbitrary batch slicings of one feed, both merge modes reach
+    the reference final state, and every commit writes one data file
+    per touched bucket (the merge's exact-bucket placement)."""
+    from collections import Counter
+
     from omniparser_spark.cdc.pipeline import CdcPipeline
 
     state = _slice_fixture(spark, tmp_path_factory)
@@ -192,6 +198,7 @@ def test_final_state_invariant_to_batch_slicing(
         str(root / f"c{state['n']}"),
         n_buckets=4,
         n_source_parts=spec.n_source_parts,
+        merge_mode=mode,
     )
     # arbitrary batch boundaries: apply [prev, cut) slices in order
     bounds = sorted(set(cuts)) + [spec.n_events]
@@ -208,6 +215,11 @@ def test_final_state_invariant_to_batch_slicing(
         prev = end
     got = sorted(map(tuple, pipe.read_table().collect()))
     assert got == state["ref"]
+    per_commit: Counter = Counter()
+    for r in pipe.table.meta("files").collect():
+        # path embeds the writing commit: data/snap-<v>-<id>/...
+        per_commit[(r["path"].split("/", 2)[1], r["bucket"])] += 1
+    assert max(per_commit.values()) == 1, per_commit
 
 
 # ------------------------------------------------- round-3 properties
@@ -376,78 +388,3 @@ def test_range_shard_total_order_property(spark, vals, n_shards):
     assert shards[0] >= 0 and shards[-1] < n_shards
     for s1, s2 in zip(shards, shards[1:]):
         assert max(by_shard[s1]) < min(by_shard[s2])
-
-
-# ------------------------------------------------- round-7 properties
-
-
-@given(
-    cuts=st.lists(
-        st.integers(min_value=1, max_value=399), min_size=0, max_size=4,
-        unique=True,
-    ),
-    mode=st.sampled_from(["cow", "mor"]),
-)
-@settings(
-    max_examples=4,
-    deadline=None,
-    derandomize=True,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_one_shuffle_merge_equals_two_shuffle(
-    spark, tmp_path_factory, cuts, mode
-):
-    """The one-shuffle merge plan (LWW aggregate on the exact-bucket
-    placement's partitioning, lake/merge.py `_one_shuffle_merge`) is a
-    PHYSICAL rewrite only: for arbitrary batch slicings of the same
-    feed, both plan shapes must produce identical final state AND the
-    same one-data-file-per-touched-bucket layout, on both the COW and
-    MOR paths."""
-    import os
-
-    from omniparser_spark.cdc.pipeline import CdcPipeline
-
-    state = _slice_fixture(spark, tmp_path_factory)
-    spec, feed, root = state["spec"], state["feed"], state["root"]
-    bounds = sorted(set(cuts)) + [spec.n_events]
-
-    results = {}
-    for flag in ("1", "0"):
-        state["n"] += 1
-        os.environ["SPARK_GRAFT_ONE_SHUFFLE_MERGE"] = flag
-        try:
-            pipe = CdcPipeline(
-                spark,
-                str(root / f"os{state['n']}_t"),
-                str(root / f"os{state['n']}_c"),
-                n_buckets=4,
-                n_source_parts=spec.n_source_parts,
-                merge_mode=mode,
-            )
-            prev = 0
-            for i, end in enumerate(bounds):
-                if end <= prev:
-                    continue
-                raw = feed.filter(
-                    (F.col("offset") >= prev) & (F.col("offset") <= end - 1)
-                )
-                pipe.apply_batch(
-                    raw, batch_id=i, offset_start=prev, offset_end=end - 1
-                )
-                prev = end
-            rows = sorted(map(tuple, pipe.read_table().collect()))
-            from collections import Counter
-
-            per_commit: dict[tuple, int] = Counter()
-            for r in pipe.table.meta("files").collect():
-                # path embeds the writing commit: data/snap-<v>-<id>/...
-                snap = r["path"].split("/", 2)[1]
-                per_commit[(snap, r["bucket"])] += 1
-            results[flag] = (rows, max(per_commit.values()))
-        finally:
-            os.environ.pop("SPARK_GRAFT_ONE_SHUFFLE_MERGE", None)
-
-    assert results["1"][0] == results["0"][0]
-    assert results["1"][0] == state["ref"]
-    # one data file per (commit, touched bucket) under BOTH plans
-    assert results["1"][1] == 1 and results["0"][1] == 1

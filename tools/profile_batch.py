@@ -125,23 +125,24 @@ def main() -> None:
         sections.clear()
         t0 = time.time()
         # replicate run_feed's sliced fast path
+        from omniparser_spark.lake.table import fixed_shape_job
         from omniparser_spark.operators.normalize import normalize_flagged
         from pyspark.sql import functions as F
 
-        saved_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        t_canon0 = time.time()
-        canon = normalize_flagged(
-            feed.filter((F.col("offset") >= offset) & (F.col("offset") <= end))
-        )
-        sections["canon_build"] = time.time() - t_canon0
-        rec = pipe.apply_batch(
-            feed.filter(
-                (F.col("offset") >= offset) & (F.col("offset") <= end)
-            ),
-            bid, offset, end, _canon=canon,
-        )
-        spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
+        with fixed_shape_job(spark):
+            t_canon0 = time.time()
+            canon = normalize_flagged(
+                feed.filter(
+                    (F.col("offset") >= offset) & (F.col("offset") <= end)
+                )
+            )
+            sections["canon_build"] = time.time() - t_canon0
+            rec = pipe.apply_batch(
+                feed.filter(
+                    (F.col("offset") >= offset) & (F.col("offset") <= end)
+                ),
+                bid, offset, end, _canon=canon,
+            )
         wall = time.time() - t0
         row = {
             "batch_id": bid,
