@@ -1,8 +1,11 @@
 """Resumable offset checkpoints + per-partition lineage manifests.
 
-One JSON document per committed micro-batch, plus an atomically-swapped
-``latest.json`` pointer (same ``os.replace`` protocol as the table
-metadata — a checkpoint is only visible once fully written).
+One JSON document per committed micro-batch, plus a ``latest.json``
+pointer. Both — and the ``history-*.jsonl`` archives — are written by
+:func:`~omniparser_spark.lake.durable.atomic_write`, the same protocol
+as the table metadata (temp file in the same dir, write, fsync file,
+``os.replace``, fsync dir): a checkpoint is only visible once fully on
+disk, and the batch file is durable before ``latest.json`` names it.
 
 A checkpoint records exactly what the north rule asks lineage to carry:
 the source offset range, per-source-partition offset ranges and row
@@ -16,8 +19,9 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from typing import Any
+
+from omniparser_spark.lake.durable import atomic_write
 
 LATEST = "latest.json"
 
@@ -44,12 +48,9 @@ class CheckpointStore:
 
     def commit(self, record: dict[str, Any]) -> None:
         bid = int(record["batch_id"])
-        with open(os.path.join(self.path, f"batch-{bid:010d}.json"), "w") as f:
-            json.dump(record, f, indent=1, sort_keys=True)
-        fd, tmp = tempfile.mkstemp(dir=self.path)
-        with os.fdopen(fd, "w") as f:
-            json.dump(record, f, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path, LATEST))
+        text = json.dumps(record, indent=1, sort_keys=True)
+        atomic_write(os.path.join(self.path, f"batch-{bid:010d}.json"), text)
+        atomic_write(os.path.join(self.path, LATEST), text)
 
     def all(self) -> list[dict[str, Any]]:
         names = sorted(os.listdir(self.path))
@@ -98,11 +99,10 @@ class CheckpointStore:
         first = int(records[0]["batch_id"])
         last = int(records[-1]["batch_id"])
         archive = f"history-{first:010d}-{last:010d}.jsonl"
-        fd, tmp = tempfile.mkstemp(dir=self.path)
-        with os.fdopen(fd, "w") as f:
-            for r in records:
-                f.write(json.dumps(r, sort_keys=True) + "\n")
-        os.replace(tmp, os.path.join(self.path, archive))
+        atomic_write(
+            os.path.join(self.path, archive),
+            "".join(json.dumps(r, sort_keys=True) + "\n" for r in records),
+        )
         for name in fold:
             try:
                 os.remove(os.path.join(self.path, name))

@@ -45,13 +45,13 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omniparser_spark.lake.durable import atomic_write
 from omniparser_spark.lake.table import LakeTable
 
 _EXPORT_SCHEMA = T.StructType(
@@ -305,10 +305,7 @@ def export_changelog(
     # write-then-rename: the manifest advance is the commit point; a
     # crash before it leaves an orphan batch dir the re-export of the
     # same range overwrites (deterministic frames -> idempotent)
-    fd, tmp = tempfile.mkstemp(dir=out_dir)
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, _manifest_path(out_dir))
+    atomic_write(_manifest_path(out_dir), json.dumps(manifest))
     return record
 
 

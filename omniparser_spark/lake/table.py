@@ -12,9 +12,12 @@ the production swap-in is 1:1:
   the table size — the property that makes COW MERGE viable at 100 TB.
 - **snapshot metadata + atomic pointer**: each commit writes
   ``metadata/v{N}.metadata.json`` (schema, per-bucket data dirs,
-  summary properties, parent pointer) and atomically swaps
-  ``metadata/version-hint.text`` via ``os.replace`` — the single-writer
-  analogue of Iceberg's optimistic metadata CAS.
+  summary properties, parent pointer), then swaps
+  ``metadata/version-hint.text`` — the single-writer analogue of
+  Iceberg's optimistic metadata CAS. Both, and tag refs, go through
+  ``lake/durable.py:atomic_write`` (tmp in the same dir, write, fsync
+  file, ``os.replace``, fsync dir), so the pointer never names a
+  metadata file that is not whole on disk.
 - **snapshot summary properties** carry ``batch_id`` /
   ``max_offset_applied`` — the exactly-once fence: a re-delivered
   micro-batch is detected *before* any work (reference analogue: the
@@ -35,7 +38,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
-import tempfile
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -45,7 +48,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omniparser_spark.lake.durable import atomic_write
+
 VERSION_HINT = "version-hint.text"
+_META_FILE = re.compile(r"v(\d+)\.metadata\.json")
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -338,17 +344,30 @@ class LakeTable:
     def _meta_dir(self) -> str:
         return os.path.join(self.path, "metadata")
 
-    def current(self) -> Snapshot:
+    def _meta_path(self, version: int) -> str:
+        return os.path.join(self._meta_dir, f"v{version}.metadata.json")
+
+    def _meta_versions(self) -> list[int]:
+        """Every version with a metadata file on disk: the kept chain,
+        pending stages and not-yet-collected expired snapshots."""
+        return [
+            int(m.group(1))
+            for m in map(_META_FILE.fullmatch, os.listdir(self._meta_dir))
+            if m
+        ]
+
+    def _head_version(self) -> int:
+        """The published head: the version the pointer file names."""
         with open(os.path.join(self._meta_dir, VERSION_HINT)) as f:
-            v = int(f.read().strip())
-        return self.snapshot_at(v)
+            return int(f.read().strip())
+
+    def current(self) -> Snapshot:
+        return self.snapshot_at(self._head_version())
 
     def snapshot_at(self, version: int) -> Snapshot:
         """Load a specific snapshot's metadata (raises FileNotFoundError
         if it was expired — same contract as Iceberg time travel)."""
-        with open(
-            os.path.join(self._meta_dir, f"v{version}.metadata.json")
-        ) as f:
+        with open(self._meta_path(version)) as f:
             return Snapshot.from_json(f.read())
 
     # ---------- tags (Iceberg tag refs: named, retained snapshots) ----------
@@ -365,10 +384,7 @@ class LakeTable:
             return {k: int(v) for k, v in json.load(f).items()}
 
     def _write_tags(self, tags: dict[str, int]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self._meta_dir)
-        with os.fdopen(fd, "w") as f:
-            json.dump(tags, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._refs_path)
+        atomic_write(self._refs_path, json.dumps(tags, indent=1, sort_keys=True))
 
     def create_tag(self, name: str, version: int | None = None) -> int:
         """Pin a snapshot under a name (Iceberg `ALTER TABLE ... CREATE
@@ -447,20 +463,13 @@ class LakeTable:
         bookkeeping), materialized into small DataFrames so they
         compose with joins/filters like any other table.
         """
-        import re as _re
-
         if name == "snapshots":
             head = self.current().version
             rows = []
-            for fn in os.listdir(self._meta_dir):
-                m = _re.fullmatch(r"v(\d+)\.metadata\.json", fn)
-                if not m:
-                    continue
-                p = os.path.join(self._meta_dir, fn)
+            for v in self._meta_versions():
                 try:
-                    with open(p) as f:
-                        s = Snapshot.from_json(f.read())
-                    mtime = os.path.getmtime(p)
+                    s = self.snapshot_at(v)
+                    mtime = os.path.getmtime(self._meta_path(v))
                 except (FileNotFoundError, ValueError):
                     continue
                 rows.append((
@@ -544,16 +553,13 @@ class LakeTable:
             snaps.append(cur)
             if cur.parent_version is None:
                 break
-            parent = os.path.join(
-                self._meta_dir, f"v{cur.parent_version}.metadata.json"
-            )
-            if not os.path.exists(parent):
+            try:
+                cur = self.snapshot_at(cur.parent_version)
+            except FileNotFoundError:
                 # parent expired (or a crash interrupted expiry between
                 # metadata deletes and the root relink): the chain ends
                 # here — same contract as Iceberg's expire_snapshots.
                 break
-            with open(parent) as f:
-                cur = Snapshot.from_json(f.read())
         return snaps
 
     @contextlib.contextmanager
@@ -630,30 +636,32 @@ class LakeTable:
         missing the staged batch (stage path) or the staged batch's data
         would be silently orphaned (commit path).
 
+        A pending file carrying the head's own batch fence stages no
+        unapplied batch: it is a fence-neutral commit (compaction,
+        erasure, rescale) that failed before its pointer swap, and
+        overwriting it loses nothing that was published.
+
         A metadata file at or below the PUBLISHED head is not a stage —
         it is a committed snapshot (a concurrent writer advanced the
         head past our assembled version); that case is the moved-head
         conflict, handled by the swap's expected-parent check and the
         rebase loop, so this guard must not fire for it."""
-        with open(os.path.join(self._meta_dir, VERSION_HINT)) as f:
-            head = int(f.read().strip())
-        if snap.version <= head:
+        head = self._head_version()
+        if snap.version <= head or not os.path.exists(
+            self._meta_path(snap.version)
+        ):
             return
-        meta_path = os.path.join(
-            self._meta_dir, f"v{snap.version}.metadata.json"
+        pending_batch = self.snapshot_at(snap.version).summary.get("batch_id")
+        if pending_batch in (
+            snap.summary.get("batch_id"),
+            self.snapshot_at(head).summary.get("batch_id"),
+        ):
+            return
+        raise ConcurrentCommitError(
+            f"a staged snapshot v{snap.version} for batch {pending_batch} "
+            "is pending; publish or abandon it before committing batch "
+            f"{snap.summary.get('batch_id')}"
         )
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                existing = Snapshot.from_json(f.read())
-            if existing.summary.get("batch_id") != snap.summary.get(
-                "batch_id"
-            ):
-                raise ConcurrentCommitError(
-                    f"a staged snapshot v{snap.version} for batch "
-                    f"{existing.summary.get('batch_id')} is pending; "
-                    "publish or abandon it before committing batch "
-                    f"{snap.summary.get('batch_id')}"
-                )
 
     def _validate_rebase(
         self,
@@ -748,11 +756,10 @@ class LakeTable:
         return snap
 
     def _write_metadata_file(self, snap: Snapshot) -> None:
-        meta_path = os.path.join(
-            self._meta_dir, f"v{snap.version}.metadata.json"
-        )
-        with open(meta_path, "w") as f:
-            f.write(snap.to_json())
+        atomic_write(self._meta_path(snap.version), snap.to_json())
+
+    def _write_pointer(self, version: int) -> None:
+        atomic_write(os.path.join(self._meta_dir, VERSION_HINT), str(version))
 
     def publish(self, version: int) -> Snapshot:
         """Write-audit-publish: fast-forward the main pointer to a
@@ -765,19 +772,14 @@ class LakeTable:
         production lake ingest."""
         snap = self.snapshot_at(version)  # raises if never staged/expired
         with self._commit_lock():
-            hint = os.path.join(self._meta_dir, VERSION_HINT)
-            with open(hint) as f:
-                current = int(f.read().strip())
+            current = self._head_version()
             if snap.parent_version != current:
                 raise ConcurrentCommitError(
                     f"staged v{version} was built on v{snap.parent_version} "
                     f"but the table head is v{current}; re-stage on the "
                     "current head"
                 )
-            fd, tmp = tempfile.mkstemp(dir=self._meta_dir)
-            with os.fdopen(fd, "w") as f:
-                f.write(str(version))
-            os.replace(tmp, hint)
+            self._write_pointer(version)
         return snap
 
     def abandon_stage(self, version: int) -> None:
@@ -798,15 +800,13 @@ class LakeTable:
         metadata file."""
         v = int(version)
         with self._commit_lock():
-            hint = os.path.join(self._meta_dir, VERSION_HINT)
-            with open(hint) as f:
-                head = int(f.read().strip())
+            head = self._head_version()
             if v <= head:
                 raise ValueError(
                     f"v{v} is at or below the published head v{head} — "
                     "a committed snapshot, not a pending stage"
                 )
-            meta_path = os.path.join(self._meta_dir, f"v{v}.metadata.json")
+            meta_path = self._meta_path(v)
             if not os.path.exists(meta_path):
                 raise FileNotFoundError(
                     f"no staged snapshot v{v} to abandon"
@@ -816,9 +816,10 @@ class LakeTable:
     def _write_snapshot(
         self, snap: Snapshot, expected_parent: int | None = None
     ) -> None:
-        """Iceberg-style commit: write immutable metadata file, then
-        atomically swap the version pointer (os.replace is atomic on
-        POSIX — the single-writer analogue of the catalog CAS).
+        """Iceberg-style commit: durably write the immutable metadata
+        file, then atomically swap the version pointer (both through
+        ``atomic_write`` — the single-writer analogue of the catalog
+        CAS).
 
         `expected_parent`: optimistic-concurrency check — if another
         writer advanced the pointer since this commit's base snapshot
@@ -832,9 +833,7 @@ class LakeTable:
         """
         with self._commit_lock():
             if expected_parent is not None:
-                hint = os.path.join(self._meta_dir, VERSION_HINT)
-                with open(hint) as f:
-                    current = int(f.read().strip())
+                current = self._head_version()
                 if current != expected_parent:
                     raise ConcurrentCommitError(
                         f"table {self.path} moved to v{current} while this "
@@ -842,10 +841,7 @@ class LakeTable:
                         "and retry"
                     )
             self._write_metadata_file(snap)
-            fd, tmp = tempfile.mkstemp(dir=self._meta_dir)
-            with os.fdopen(fd, "w") as f:
-                f.write(str(snap.version))
-            os.replace(tmp, os.path.join(self._meta_dir, VERSION_HINT))
+            self._write_pointer(snap.version)
 
     # ---------- read ----------
 
@@ -959,6 +955,31 @@ class LakeTable:
 
     # ---------- write ----------
 
+    def _write_bucket_files(self, df: DataFrame, prev: Snapshot) -> dict[str, str]:
+        """The data step of :meth:`commit` and :meth:`commit_delta`:
+        write `df` ``partitionBy("_bucket")`` into a fresh snapshot root
+        and return {bucket id: dir relative to the table root} for each
+        bucket dir written (a bucket left empty gets none)."""
+        snap_rel = os.path.join(
+            "data", f"snap-{prev.version + 1}-{uuid.uuid4().hex[:8]}"
+        )
+        snap_dir = os.path.join(self.path, snap_rel)
+        sort_order = prev.summary.get("sort_order")
+        if sort_order and all(c in df.columns for c in sort_order):
+            # declared table sort order: in-task sort only (rows are
+            # already bucket-co-located), applied on every commit path
+            # (merge / delta / erase / rescale) uniformly
+            df = df.sortWithinPartitions("_bucket", *sort_order)
+        with fixed_shape_job(df.sparkSession):
+            df.write.mode("overwrite").partitionBy("_bucket").parquet(snap_dir)
+        if not os.path.isdir(snap_dir):
+            return {}
+        return {
+            entry.split("=", 1)[1]: os.path.join(snap_rel, entry)
+            for entry in os.listdir(snap_dir)
+            if entry.startswith("_bucket=")
+        }
+
     def commit(
         self,
         df: DataFrame,
@@ -1014,32 +1035,7 @@ class LakeTable:
         window starts at this call (the pre-round-7 behavior).
         """
         prev = base if base is not None else self.current()
-        snap_rel = os.path.join(
-            "data", f"snap-{prev.version + 1}-{uuid.uuid4().hex[:8]}"
-        )
-        snap_dir = os.path.join(self.path, snap_rel)
-
-        sort_order = prev.summary.get("sort_order")
-        if sort_order and all(c in df.columns for c in sort_order):
-            # declared table sort order: in-task sort only (rows are
-            # already bucket-co-located), applied on every commit path
-            # (merge / erase / rescale) uniformly
-            df = df.sortWithinPartitions("_bucket", *sort_order)
-        with fixed_shape_job(df.sparkSession):
-            (
-                df.write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(snap_dir)
-            )
-
-        # discover written bucket dirs (a bucket whose content became
-        # empty — e.g. all rows deleted — simply disappears)
-        new_dirs: dict[str, str] = {}
-        if os.path.isdir(snap_dir):
-            for entry in os.listdir(snap_dir):
-                if entry.startswith("_bucket="):
-                    b = entry.split("=", 1)[1]
-                    new_dirs[b] = os.path.join(snap_rel, entry)
+        new_dirs = self._write_bucket_files(df, prev)
 
         def assemble(base: Snapshot) -> Snapshot:
             bucket_dirs = dict(base.bucket_dirs)
@@ -1163,25 +1159,7 @@ class LakeTable:
         plan derived its bucket expression from.
         """
         prev = base if base is not None else self.current()
-        snap_rel = os.path.join(
-            "data", f"snap-{prev.version + 1}-{uuid.uuid4().hex[:8]}"
-        )
-        snap_dir = os.path.join(self.path, snap_rel)
-
-        sort_order = prev.summary.get("sort_order")
-        if sort_order and all(c in df.columns for c in sort_order):
-            df = df.sortWithinPartitions("_bucket", *sort_order)
-        with fixed_shape_job(df.sparkSession):
-            df.write.mode("overwrite").partitionBy("_bucket").parquet(
-                snap_dir
-            )
-
-        new_dirs: dict[str, str] = {}
-        if os.path.isdir(snap_dir):
-            for entry in os.listdir(snap_dir):
-                if entry.startswith("_bucket="):
-                    b = entry.split("=", 1)[1]
-                    new_dirs[b] = os.path.join(snap_rel, entry)
+        new_dirs = self._write_bucket_files(df, prev)
 
         def assemble(base: Snapshot) -> Snapshot:
             delta_dirs = {
@@ -1263,14 +1241,7 @@ class LakeTable:
             bucket_stats=dict(src.bucket_stats),
             delta_dirs={b: list(x) for b, x in src.delta_dirs.items()},
         )
-        meta_path = os.path.join(
-            self._meta_dir, f"v{snap.version}.metadata.json"
-        )
-        if os.path.exists(meta_path):
-            raise ConcurrentCommitError(
-                f"a staged snapshot v{snap.version} is pending; publish "
-                "or abandon it before rolling back"
-            )
+        self._check_pending_stage(snap)
         self._write_snapshot(snap, expected_parent=prev.version)
         return snap
 
@@ -1313,25 +1284,20 @@ class LakeTable:
         # the kept chain is already minimal.
 
         # collect pending stages still inside the grace period
-        import re as _re
-
         head = snaps[0].version
         pending: list[Snapshot] = []
         now = _time.time()
-        for fn in os.listdir(self._meta_dir):
-            m = _re.fullmatch(r"v(\d+)\.metadata\.json", fn)
-            if m and int(m.group(1)) > head:
-                p = os.path.join(self._meta_dir, fn)
+        for v in self._meta_versions():
+            if v > head:
                 try:
-                    fresh = (now - os.path.getmtime(p)) < stage_grace_seconds
-                    if fresh:
-                        with open(p) as f:
-                            pending.append(Snapshot.from_json(f.read()))
+                    age = now - os.path.getmtime(self._meta_path(v))
+                    if age < stage_grace_seconds:
+                        pending.append(self.snapshot_at(v))
                 except FileNotFoundError:
                     pass
 
         # Crash-safe ordering: FIRST re-link the oldest kept snapshot as
-        # the history root (atomic tmp + os.replace, same protocol as
+        # the history root (atomic_write, same protocol as
         # _write_snapshot), THEN delete dropped metadata and data. A
         # crash at any point leaves the kept chain self-contained —
         # worst case some dropped files survive until the next expiry
@@ -1340,13 +1306,7 @@ class LakeTable:
         oldest = keep[-1]
         if oldest.parent_version is not None:
             oldest.parent_version = None
-            fd, tmp = tempfile.mkstemp(dir=self._meta_dir)
-            with os.fdopen(fd, "w") as f:
-                f.write(oldest.to_json())
-            os.replace(
-                tmp,
-                os.path.join(self._meta_dir, f"v{oldest.version}.metadata.json"),
-            )
+            self._write_metadata_file(oldest)
 
         # Deletion is a *scan* for anything the kept chain doesn't
         # reference — not a walk of the dropped snapshots — so a re-run
@@ -1360,8 +1320,6 @@ class LakeTable:
                 tagged.append(self.snapshot_at(v))
             except FileNotFoundError:
                 pass  # tag points at an already-expired snapshot
-
-        import re
 
         kept_versions = {s.version for s in keep} | {
             s.version for s in pending
@@ -1378,11 +1336,10 @@ class LakeTable:
         }
         kept_roots = {os.path.dirname(d) for d in referenced}
         removed = 0
-        for fn in os.listdir(self._meta_dir):
-            m = re.fullmatch(r"v(\d+)\.metadata\.json", fn)
-            if m and int(m.group(1)) not in kept_versions:
+        for v in self._meta_versions():
+            if v not in kept_versions:
                 try:
-                    os.remove(os.path.join(self._meta_dir, fn))
+                    os.remove(self._meta_path(v))
                 except FileNotFoundError:
                     pass
         data_root = os.path.join(self.path, "data")

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from omniparser_spark.cdc.pipeline import CdcPipeline
+from omniparser_spark.lake.durable import atomic_write
 
 
 def _stable_base_batch_id(pipeline: CdcPipeline, checkpoint_dir: str) -> int:
@@ -51,10 +52,7 @@ def _stable_base_batch_id(pipeline: CdcPipeline, checkpoint_dir: str) -> int:
             return int(fh.read().strip())
     base = pipeline.checkpoints.next_batch_id()
     os.makedirs(checkpoint_dir, exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(base))
-    os.replace(tmp, marker)
+    atomic_write(marker, str(base))
     return base
 
 

@@ -454,7 +454,14 @@ def stage_stream_dir(
     their mtimes in range order, so the file source replays them in
     (roughly) that order — the bounded-disorder arrival contract a
     watermark models (a binlog/Kafka feed is time-ordered per
-    partition; a directory of randomly-sliced files is not)."""
+    partition; a directory of randomly-sliced files is not).
+
+    Overwrite-only: the stamped mtimes start at a FIXED base
+    (``1_000_000_000 + i*100`` for part ``i``), not at the directory's
+    current newest file, so a later write that appends files to the
+    same directory would list BEFORE them and break the replay order.
+    Callers that add files after staging (re-delivery probes) stamp
+    their own mtimes above that base, e.g. ``2_000_000_000``."""
     import os
     import re
 

@@ -176,6 +176,112 @@ def test_crash_between_commit_and_checkpoint(spark, feed_df, tmp_path, feed_even
     assert _spark_rows(p2.read_table()) == sorted(_oracle_rows(feed_events))
 
 
+class _InjectedCrash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_crash_at_every_durable_write(
+    spark, feed_df, tmp_path, feed_events, mode, monkeypatch
+):
+    """Exactly-once across a failure at EVERY durable write of a batch.
+    With expire_every=1 and compact_every=1 one batch runs the whole
+    protocol: snapshot metadata, pointer swap, checkpoint file,
+    latest.json, expiry root relink and (MOR) the compaction commit.
+    For each k the k-th os.replace of batch 1 raises; a fresh pipeline
+    then resumes to the end. One more input makes Snapshot.to_json
+    raise mid-commit (an in-place metadata write would leave a 0-byte
+    file that wedges every later commit)."""
+    import os
+    import shutil
+
+    from omniparser_spark.cdc.checkpoints import CheckpointStore
+    from omniparser_spark.lake.table import Snapshot
+
+    size = SPEC.n_events // 3
+    feed = _feed_for_range(feed_df)
+    want = sorted(_oracle_rows(feed_events))
+
+    def pipeline(root):
+        return CdcPipeline(
+            spark, str(root / "table"), str(root / "ckpt"), n_buckets=8,
+            n_source_parts=SPEC.n_source_parts, merge_mode=mode,
+            expire_every=1, compact_every=1,
+        )
+
+    def batch1(p):
+        p.apply_batch(feed(size, 2 * size - 1), 1, size, 2 * size - 1)
+
+    # every case starts from a copy of the same post-batch-0 state
+    template = tmp_path / "batch0"
+    pipeline(template).apply_batch(feed(0, size - 1), 0, 0, size - 1)
+
+    real_replace = os.replace
+    targets: list[str] = []
+
+    def counting(src, dst, *a, **kw):
+        targets.append(os.path.basename(dst))
+        return real_replace(src, dst, *a, **kw)
+
+    shutil.copytree(template, tmp_path / "clean")
+    clean = pipeline(tmp_path / "clean")
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", counting)
+        batch1(clean)
+    assert len(targets) == (7 if mode == "mor" else 5), targets
+    assert {"version-hint.text", "latest.json", "batch-0000000001.json"} <= set(
+        targets
+    )
+
+    def fail_call(owner, attr, k):
+        """Arm: the k-th call of owner.attr raises instead of running."""
+        real = getattr(owner, attr)
+        calls = [0]
+
+        def flaky(*a, **kw):
+            calls[0] += 1
+            if calls[0] == k:
+                raise _InjectedCrash(f"{attr} call #{k}")
+            return real(*a, **kw)
+
+        return lambda m: m.setattr(owner, attr, flaky)
+
+    cases = [
+        (f"replace{k}_{name}", fail_call(os, "replace", k))
+        for k, name in enumerate(targets, 1)
+    ] + [("to_json", fail_call(Snapshot, "to_json", 1))]
+    for name, arm in cases:
+        root = tmp_path / name
+        shutil.copytree(template, root)
+        crashed = pipeline(root)
+        with monkeypatch.context() as m:
+            arm(m)
+            with pytest.raises(_InjectedCrash):
+                batch1(crashed)
+
+        resumed = pipeline(root)
+        resumed.run(feed, SPEC.n_events, size)
+        assert _spark_rows(resumed.read_table()) == want, name
+        recs = CheckpointStore(str(root / "ckpt")).all()
+        assert [r["batch_id"] for r in recs] == list(range(len(recs))), name
+        assert recs[0]["offset_start"] == 0, name
+        assert recs[-1]["offset_end"] == SPEC.n_events - 1, name
+        for a, b in zip(recs, recs[1:]):
+            assert b["offset_start"] == a["offset_end"] + 1, name
+        meta_dir = root / "table" / "metadata"
+        for f in meta_dir.glob("v*.metadata.json"):
+            Snapshot.from_json(f.read_text())
+        leftovers = [
+            os.path.join(d, f)
+            for d, _, files in os.walk(root)
+            for f in files
+            if f.endswith(".tmp")
+        ]
+        assert not leftovers, (name, leftovers)
+        report = resumed.table.fsck(check_rows=False)
+        assert report["ok"], (name, report)
+
+
 def test_lineage_manifests(spark, feed_df, tmp_path):
     p = CdcPipeline(
         spark, str(tmp_path / "lin_table"), str(tmp_path / "lin_ckpt"), n_buckets=4

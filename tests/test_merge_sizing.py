@@ -253,6 +253,43 @@ def test_lake_reads_no_env_vars():
         assert "os.environ" not in text and "getenv" not in text, src.name
 
 
+def test_one_durable_write_protocol():
+    """Every durable small-file write in the package goes through
+    lake/durable.py's atomic_write: no other module makes a temp file,
+    wraps a raw fd, or calls the builtin open() in a write mode."""
+    import ast
+    import pathlib
+
+    import omniparser_spark
+
+    def write_mode(call: ast.Call) -> bool:
+        mode = call.args[1] if len(call.args) > 1 else next(
+            (k.value for k in call.keywords if k.arg == "mode"), None
+        )
+        return isinstance(mode, ast.Constant) and any(
+            c in str(mode.value) for c in "wax+"
+        )
+
+    root = pathlib.Path(omniparser_spark.__file__).parent
+    offenders = []
+    for src in sorted(root.rglob("*.py")):
+        rel = src.relative_to(root).as_posix()
+        if rel == "lake/durable.py":
+            continue
+        for node in ast.walk(ast.parse(src.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if (
+                name == "mkstemp"
+                or (name == "fdopen" and isinstance(f, ast.Attribute))
+                or (isinstance(f, ast.Name) and name == "open" and write_mode(node))
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, offenders
+
+
 def test_fixed_shape_job_restores_conf(spark):
     """The AQE scope must restore the prior value on exit and on
     error, and be a no-op when AQE is already off (the _drive loop)."""
