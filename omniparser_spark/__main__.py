@@ -200,11 +200,26 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if rep["equal"] else 1
 
     feed = total = None
-    if not maintenance and not args.streaming:
-        feed = spark.read.parquet(args.feed)
-        total = args.total_events
-        if total is None:
-            total = (feed.agg(F.max("offset")).collect()[0][0] or -1) + 1
+    # source-partition domain for lineage; maintenance reads no feed and
+    # passes 1 (rows of other parts land in the overflow lineage entry)
+    n_parts = 1
+    if not maintenance:
+        # the feed's backlog in one pass: its offset frontier (replay
+        # bound, bucket sizing) and its source-partition domain
+        try:
+            feed = spark.read.parquet(args.feed)
+            hi_offset, hi_part = feed.agg(
+                F.max("offset"), F.max("source_part")
+            ).collect()[0]
+        except Exception:
+            # a stream may start before its first file lands
+            if not args.streaming:
+                raise
+        else:
+            total = (hi_offset if hi_offset is not None else -1) + 1
+            n_parts = (hi_part if hi_part is not None else 0) + 1
+        if args.total_events is not None and not args.streaming:
+            total = args.total_events
 
     n_buckets = args.n_buckets
     if n_buckets is None and not LakeTable.exists(args.table):
@@ -212,23 +227,12 @@ def main(argv: list[str] | None = None) -> int:
         # model): feed event count is an upper bound on final rows
         from omniparser_spark.lake.merge import derive_n_buckets
 
+        # a streaming run sizes from the feed's current backlog rather
+        # than silently minimum-bucketing a table that may grow 1000x
+        # (every merge would then rewrite ~the whole table)
         est = args.expected_table_rows
         if est is None:
             est = total
-        if est is None and args.streaming and args.feed:
-            # streaming run creating a new table: size from the feed's
-            # current backlog rather than silently minimum-bucketing a
-            # table that may grow 1000x (every merge would then rewrite
-            # ~the whole table)
-            try:
-                est = (
-                    spark.read.parquet(args.feed)
-                    .agg(F.max("offset"))
-                    .collect()[0][0]
-                    or -1
-                ) + 1
-            except Exception:
-                est = None
         if est is None:
             print(
                 "error: cannot size buckets for a new table — pass "
@@ -247,6 +251,7 @@ def main(argv: list[str] | None = None) -> int:
         args.checkpoint,
         n_buckets=n_buckets if n_buckets is not None else 16,
         quarantine_path=args.quarantine,
+        n_source_parts=n_parts,
         sort_order=(
             tuple(args.sort_order.split(",")) if args.sort_order else None
         ),

@@ -1,9 +1,9 @@
 """Per-micro-batch metrics.
 
-Counters are computed with one aggregate pass over the cached
-normalized batch (not N separate count() actions) and emitted into the
-checkpoint record; `MetricsLog` also keeps them in memory for tests and
-for the bench harness.
+Counters are observed on the batch's own merge actions (Spark
+Observations on the decoded slice and on the commit write, no extra
+job) and emitted into the checkpoint record; `MetricsLog` also keeps
+them in memory for tests and for the bench harness.
 """
 
 from __future__ import annotations

@@ -25,7 +25,7 @@ from __future__ import annotations
 import time
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -60,7 +60,8 @@ class CdcPipeline:
         n_buckets: int = 16,
         with_tool_column: bool = True,
         quarantine_path: str | None = None,
-        n_source_parts: int | None = None,
+        *,
+        n_source_parts: int,
         expire_keep_last: int | None = 2,
         sort_order: tuple[str, ...] | None = None,
         expire_every: int = 4,
@@ -69,11 +70,13 @@ class CdcPipeline:
     ):
         """`n_source_parts`: size of the source-partition domain (e.g.
         Kafka partition count — always known for a real binlog tail).
-        When given, each micro-batch is ONE Spark job: lineage,
-        quarantine count, and fence bookkeeping ride the merge-write
-        action via the Observation API, and the LWW dedup is folded
-        into the merge aggregate. When None, a two-job fallback
-        computes lineage with a groupBy over a cached decode.
+        A micro-batch runs no Spark job outside its merge (and its
+        dead-letter write, when quarantine capture is on): lineage (one
+        entry per part in [0, n_source_parts) plus one `source_part:
+        None` overflow entry for rows outside it or NULL), quarantine
+        count, and the merge's `rows_written`/`tombstones` ride the
+        merge's actions via the Observation API, and the LWW dedup is
+        folded into the merge aggregate.
 
         `merge_mode`: "cow" (default) rewrites touched buckets per
         batch; "mor" appends per-bucket delta files (zero base reads
@@ -106,10 +109,6 @@ class CdcPipeline:
         self.merge_mode = merge_mode
         self.compact_every = max(int(compact_every), 1)
         self._batches_since_compaction = 0
-        # Observation-based merge stats; the streaming wrapper turns
-        # this off (foreachBatch's cloned session never completes
-        # Observation futures) and those batches record null counts.
-        self.observe_merge = True
         # routing hook (cdc/routing.py): a predicate builder over the
         # CANONICAL columns applied whenever this pipeline decodes raw
         # rows itself (apply_batch without _canon — notably
@@ -179,129 +178,73 @@ class CdcPipeline:
             if self.canon_filter is not None:
                 canon = canon.filter(self.canon_filter() | ~F.col("_ok"))
 
-        if self.n_source_parts is not None:
-            # ---- fast path: ONE Spark job per micro-batch ----
-            # Lineage (bounded source-partition domain), quarantine
-            # count, and events_in are observed DURING the merge-write
-            # action; the LWW dedup is subsumed by the merge's max_by
-            # aggregate (same grouping keys, same total order) so the
-            # batch-side pre-shuffle disappears entirely.
-            from pyspark.sql import Observation
-
-            ok = F.col("_ok")
-            aggs = [
-                F.count(F.when(ok, 1)).alias("rows_total"),
-                F.count(F.when(~ok, 1)).alias("bad"),
-                # freshness watermark: newest event time in the batch —
-                # commit wall time minus this is the end-to-end lag a
-                # CDC deployment alerts on
-                F.max(F.when(ok, F.col("ts"))).alias("max_ts"),
-            ]
-            for p in range(self.n_source_parts):
-                cond = ok & (F.col("source_part") == p)
-                aggs.append(F.count(F.when(cond, 1)).alias(f"rows_{p}"))
-                aggs.append(
-                    F.min(F.when(cond, F.col("offset"))).alias(f"mn_{p}")
-                )
-                aggs.append(
-                    F.max(F.when(cond, F.col("offset"))).alias(f"mx_{p}")
-                )
-            obs = Observation(f"cdc_batch_{batch_id}")
-            good, quarantine = split_flagged(canon.observe(obs, *aggs))
-            if self.quarantine_path:
-                # dead-letter side output BEFORE the table commit, to a
-                # per-batch dir with overwrite: a batch replayed after a
-                # crash in either order overwrites identically (never
-                # loses or duplicates quarantine rows). Costs one extra
-                # decode pass of the slice — only when quarantine
-                # capture is enabled. This write also fills the
-                # Observation (it scans all rows pre-split).
-                quarantine.write.mode("overwrite").parquet(
-                    f"{self.quarantine_path}/batch_id={batch_id}"
-                )
-            stats = merge_into(
-                self.table,
-                good,
-                batch_id=batch_id,
-                expected_rows=(
-                    expected_rows
-                    if expected_rows is not None
-                    else offset_end - offset_start + 1
-                ),
-                max_offset=offset_end,
-                observe_stats=self.observe_merge,
-                mode=self.merge_mode,
+        # No Spark job of its own: lineage, quarantine count and
+        # events_in are observed DURING the merge's (or the dead-letter
+        # write's) actions; the LWW dedup is subsumed by the merge's
+        # max_by aggregate (same grouping keys, same total order) so the
+        # batch-side pre-shuffle disappears entirely. The merge runs its
+        # commit write on this slice's session, so the Observation
+        # completes inside foreachBatch too (merge_into's union note).
+        n_parts = self.n_source_parts
+        ok = F.col("_ok")
+        aggs = [
+            F.count(F.when(ok, 1)).alias("rows_total"),
+            F.count(F.when(~ok, 1)).alias("bad"),
+            # freshness watermark: newest event time in the batch —
+            # commit wall time minus this is the end-to-end lag a
+            # CDC deployment alerts on
+            F.max(F.when(ok, F.col("ts"))).alias("max_ts"),
+        ]
+        part = F.col("source_part")
+        # overflow entry (source_part None): rows whose part is outside
+        # [0, n_parts) or NULL are applied too, so lineage must count them
+        in_domain = F.coalesce(part.between(0, n_parts - 1), F.lit(False))
+        parts = [(p, part == p) for p in range(n_parts)]
+        parts.append((None, ~in_domain))
+        for i, (_, in_part) in enumerate(parts):
+            cond = ok & in_part
+            aggs.append(F.count(F.when(cond, 1)).alias(f"rows_{i}"))
+            aggs.append(F.min(F.when(cond, F.col("offset"))).alias(f"mn_{i}"))
+            aggs.append(F.max(F.when(cond, F.col("offset"))).alias(f"mx_{i}"))
+        obs = Observation(f"cdc_batch_{batch_id}")
+        good, quarantine = split_flagged(canon.observe(obs, *aggs))
+        if self.quarantine_path:
+            # dead-letter side output BEFORE the table commit, to a
+            # per-batch dir with overwrite: a batch replayed after a
+            # crash in either order overwrites identically (never
+            # loses or duplicates quarantine rows). Costs one extra
+            # decode pass of the slice — only when quarantine capture
+            # is enabled. This write also fills the Observation (it
+            # scans all rows pre-split).
+            quarantine.write.mode("overwrite").parquet(
+                f"{self.quarantine_path}/batch_id={batch_id}"
             )
-            row = obs.get  # an action ran: observation is filled
-            events_in = int(row["rows_total"])
-            n_quarantined = int(row["bad"])
-            max_event_ts = row["max_ts"]
-            lineage_rows = [
-                {
-                    "source_part": p,
-                    "rows": int(row[f"rows_{p}"]),
-                    "offset_min": int(row[f"mn_{p}"]),
-                    "offset_max": int(row[f"mx_{p}"]),
-                }
-                for p in range(self.n_source_parts)
-                if int(row[f"rows_{p}"] or 0) > 0
-            ]
-        else:
-            # ---- fallback: two jobs (unknown source-partition domain) ----
-            canon = canon.persist()
-            try:
-                good, quarantine = split_flagged(canon)
-                rows = (
-                    canon.groupBy("source_part")
-                    .agg(
-                        F.count(F.when(F.col("_ok"), 1)).alias("rows"),
-                        F.min(F.when(F.col("_ok"), F.col("offset"))).alias(
-                            "offset_min"
-                        ),
-                        F.max(F.when(F.col("_ok"), F.col("offset"))).alias(
-                            "offset_max"
-                        ),
-                        F.count(F.when(~F.col("_ok"), 1)).alias("bad"),
-                        F.max(F.when(F.col("_ok"), F.col("ts"))).alias(
-                            "max_ts"
-                        ),
-                    )
-                    .collect()
-                )
-                events_in = sum(int(r["rows"]) for r in rows)
-                n_quarantined = sum(int(r["bad"]) for r in rows)
-                max_event_ts = max(
-                    (r["max_ts"] for r in rows if r["max_ts"] is not None),
-                    default=None,
-                )
-                if self.quarantine_path:
-                    quarantine.write.mode("overwrite").parquet(
-                        f"{self.quarantine_path}/batch_id={batch_id}"
-                    )
-                stats = merge_into(
-                    self.table,
-                    good,
-                    batch_id=batch_id,
-                    expected_rows=events_in,
-                    max_offset=offset_end,
-                    observe_stats=self.observe_merge,
-                    mode=self.merge_mode,
-                )
-                lineage_rows = sorted(
-                    (
-                        {
-                            "source_part": int(r["source_part"]),
-                            "rows": int(r["rows"]),
-                            "offset_min": int(r["offset_min"]),
-                            "offset_max": int(r["offset_max"]),
-                        }
-                        for r in rows
-                        if int(r["rows"]) > 0
-                    ),
-                    key=lambda d: d["source_part"],
-                )
-            finally:
-                canon.unpersist()
+        stats = merge_into(
+            self.table,
+            good,
+            batch_id=batch_id,
+            expected_rows=(
+                expected_rows
+                if expected_rows is not None
+                else offset_end - offset_start + 1
+            ),
+            max_offset=offset_end,
+            mode=self.merge_mode,
+        )
+        row = obs.get  # an action ran: observation is filled
+        events_in = int(row["rows_total"])
+        n_quarantined = int(row["bad"])
+        max_event_ts = row["max_ts"]
+        lineage_rows = [
+            {
+                "source_part": p,
+                "rows": int(row[f"rows_{i}"]),
+                "offset_min": int(row[f"mn_{i}"]),
+                "offset_max": int(row[f"mx_{i}"]),
+            }
+            for i, (p, _) in enumerate(parts)
+            if int(row[f"rows_{i}"] or 0) > 0
+        ]
 
         record: dict[str, Any] = {
             "batch_id": batch_id,
@@ -311,9 +254,8 @@ class CdcPipeline:
             "quarantined": n_quarantined,
             # counts observed on the merge commit write itself:
             # rows_written = post-merge row count of the touched buckets
-            # (None when merge stats weren't observed, e.g. streaming)
-            "rows_written": stats.get("rows_written") if stats else 0,
-            "tombstones": stats.get("tombstones") if stats else 0,
+            "rows_written": stats["rows_written"] if stats else 0,
+            "tombstones": stats["tombstones"] if stats else 0,
             "fenced": stats is None,
             "snapshot_version": (
                 stats["snapshot_version"] if stats else self.table.current().version

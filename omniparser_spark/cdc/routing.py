@@ -65,7 +65,8 @@ class RoutedPipeline:
         base_path: str,
         routes: dict[str, Callable[[], Column]],
         n_buckets: int = 8,
-        n_source_parts: int | None = None,
+        *,
+        n_source_parts: int,
         quarantine: bool = True,
         merge_mode: str = "cow",
         compact_every: int = 8,

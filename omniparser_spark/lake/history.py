@@ -176,12 +176,9 @@ class HistorySink:
         )
         batch = versions.unionByName(closing)
         # NOTE op is never 'D': history rows are all VISIBLE —
-        # is_deleted is a data column, not the engine tombstone.
-        # observe_stats=False: an all-late batch produces an EMPTY
-        # merge write, and a write Observation never completes on an
-        # empty relation (obs.get would hang — review finding); the
-        # fence must still advance so the replayed slice stays
-        # exactly-once.
+        # is_deleted is a data column, not the engine tombstone. An
+        # all-late batch makes an EMPTY merge write; the fence still
+        # advances, so the replayed slice stays exactly-once.
         try:
             stats = merge_into(
                 self.table,
@@ -189,7 +186,6 @@ class HistorySink:
                 batch_id=batch_id,
                 max_offset=max_offset,
                 mode=self.merge_mode,
-                observe_stats=False,
                 # the batch's keys are a subset of `changes`' keys, so
                 # the touched set above covers the merge — skips a
                 # second full key-distinct pass inside merge_into

@@ -45,7 +45,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -105,6 +105,21 @@ WHEN NOT MATCHED THEN INSERT ({ins_cols}) VALUES ({ins_vals})
 """.strip()
 
 
+def _observe_written(
+    df: DataFrame, name: str
+) -> tuple[DataFrame, Observation]:
+    """Observe `rows_written` (rows the commit writes, live +
+    tombstones) and `tombstones` (delete markers among them) on the
+    commit write itself: no extra action, and an empty write
+    observes 0."""
+    obs = Observation(name)
+    return df.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows_written"),
+        F.count(F.when(F.col("_deleted"), 1)).alias("tombstones"),
+    ), obs
+
+
 def merge_into(
     table: LakeTable,
     batch: DataFrame,
@@ -112,7 +127,6 @@ def merge_into(
     keys: Sequence[str] | None = None,
     expected_rows: int | None = None,
     max_offset: int | None = None,
-    observe_stats: bool = True,
     stage: bool = False,
     mode: str = "cow",
     touched_buckets: Sequence[int] | None = None,
@@ -194,13 +208,9 @@ def merge_into(
     PUBLISHED head, so a crashed (never-published) stage is simply
     re-staged on re-delivery — exactly-once composes with WAP.
 
-    `observe_stats=True` (the default) REQUIRES the commit write to be
-    non-empty: a CollectMetrics node on an empty relation never fires
-    and ``obs.get`` blocks forever. Callers whose batches can
-    legitimately be empty (registries under full replay, view syncs
-    over changelog-neutral version ranges, all-late history batches,
-    foreachBatch clones) must pass ``observe_stats=False``; the batch
-    fence and the commit itself work fine on empty writes.
+    `rows_written`/`tombstones` are always observed on the commit write
+    itself (no extra action), including empty writes (both count 0)
+    and writes inside ``foreachBatch``.
     """
     # pin the WHOLE merge — fence check, bucket expr, target read, and
     # the final commit — to one base snapshot, so an interleaved commit
@@ -268,16 +278,7 @@ def merge_into(
                 *[F.col(f"_w.{c}").alias(c) for c in out_cols],
             )
         )
-        obs = None
-        if observe_stats:
-            from pyspark.sql import Observation
-
-            obs = Observation(f"merge_mor_{batch_id}")
-            delta = delta.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows_written"),
-                F.count(F.when(F.col("_deleted"), 1)).alias("tombstones"),
-            )
+        delta, obs = _observe_written(delta, f"merge_mor_{batch_id}")
         prev_counts = {
             b: len(lst) for b, lst in base_snap.delta_dirs.items()
         }
@@ -296,19 +297,13 @@ def merge_into(
             for b, lst in snap.delta_dirs.items()
             if len(lst) > prev_counts.get(b, 0)
         )
-        stats_row = obs.get if obs is not None else None
         return {
             "batch_id": batch_id,
             "snapshot_version": snap.version,
             "staged": stage,
             "mode": "mor",
             "touched_buckets": touched,
-            "rows_written": (
-                int(stats_row["rows_written"]) if stats_row else None
-            ),
-            "tombstones": (
-                int(stats_row["tombstones"]) if stats_row else None
-            ),
+            **{k: int(v) for k, v in obs.get.items()},
         }
 
     if cover is not None:
@@ -367,7 +362,11 @@ def merge_into(
         (F.col("op") == "D").alias("_deleted"),
         F.lit(0).alias("_pref"),
     )
-    u = t.unionByName(s).withColumn("_bucket", bucket_expr(key_col, n_buckets))
+    # batch side first: the union, and so the commit write, runs on the
+    # batch's session, the one whose listener completes Observations
+    # the caller put on the batch (inside foreachBatch that is the
+    # stream's own session, not the table's)
+    u = s.unionByName(t).withColumn("_bucket", bucket_expr(key_col, n_buckets))
     payload = F.struct(*data_cols, "_last_offset", "_deleted")
     order = F.struct(F.col("ts"), F.col("_last_offset"), F.col("_pref"))
     # one data file per touched bucket: place the UNION by bucket salt
@@ -386,21 +385,8 @@ def merge_into(
         F.col("_w._deleted").alias("_deleted"),
     )
 
-    # observe applied-row stats on the commit write itself (no extra
-    # action): rows_written = post-merge row count of the touched
-    # buckets (live + tombstones), tombstones = delete markers among
-    # them. `observe_stats=False` for callers inside foreachBatch —
-    # cloned streaming sessions never complete Observation futures.
-    obs = None
-    if observe_stats:
-        from pyspark.sql import Observation
-
-        obs = Observation(f"merge_{batch_id}")
-        merged = merged.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_written"),
-            F.count(F.when(F.col("_deleted"), 1)).alias("tombstones"),
-        )
+    # rows_written = post-merge row count of the touched buckets
+    merged, obs = _observe_written(merged, f"merge_{batch_id}")
 
     snap = table.commit(
         merged,
@@ -420,12 +406,10 @@ def merge_into(
         ),
         base=base_snap,
     )
-    stats_row = obs.get if obs is not None else None
     return {
         "batch_id": batch_id,
         "snapshot_version": snap.version,
         "staged": stage,
         "touched_buckets": touched,
-        "rows_written": int(stats_row["rows_written"]) if stats_row else None,
-        "tombstones": int(stats_row["tombstones"]) if stats_row else None,
+        **{k: int(v) for k, v in obs.get.items()},
     }

@@ -213,12 +213,8 @@ def create_rollup_view(
             F.lit("U").alias("op"),
         )
     )
-    # observe_stats=False: a view bootstrapped over an EMPTY source
-    # produces an empty commit write, and a write Observation never
-    # completes on an empty relation (the obs.get hang class)
     merge_into(
-        view, rows, batch_id=0, keys=(group_col,),
-        max_offset=src_version, observe_stats=False,
+        view, rows, batch_id=0, keys=(group_col,), max_offset=src_version
     )
     table.create_tag(_view_tag(path), src_version)
     return view
@@ -397,16 +393,12 @@ def sync_rollup_view(
     # per-epoch cost of the streaming view path
     rows = rows.persist()
     try:
-        # observe_stats=False: a version range whose commits are all
-        # changelog-neutral (compaction, erasure) yields ZERO changed
-        # groups — an empty merge write would hang its Observation
         rec = merge_into(
             view,
             rows,
             batch_id=int(vsum.get("batch_id", -1)) + 1,
             keys=(group_col,),
             max_offset=to_v,
-            observe_stats=False,
             # `rows`' groups come from the same changed-group set the
             # touched list was computed over — passing it skips the
             # merge's own distinct pass over the cached delta
@@ -426,8 +418,8 @@ def sync_rollup_view(
             "fenced": rec is None,
             "from_version": from_version,
             "to_version": to_v,
-            # counted on the cached delta frame (the merge's
-            # Observation is off — see above)
+            # counted on the cached delta frame: the merge's
+            # rows_written counts whole touched view buckets
             "groups_touched": rows.count() if rec is not None else 0,
             "view_buckets_read": touched,
         }
@@ -496,8 +488,7 @@ def create_hll_view(
         F.lit("U").alias("op"),
     )
     merge_into(
-        view, rows, batch_id=0, keys=(group_col,),
-        max_offset=src_version, observe_stats=False,
+        view, rows, batch_id=0, keys=(group_col,), max_offset=src_version
     )
     table.create_tag(_view_tag(path), src_version)
     return view
@@ -571,7 +562,7 @@ def sync_hll_view(
     try:
         rec = merge_into(
             view, merged, batch_id=int(vsum.get("batch_id", -1)) + 1,
-            keys=(group_col,), max_offset=to_v, observe_stats=False,
+            keys=(group_col,), max_offset=to_v,
             # merged's groups == the sketched groups the touched list
             # was computed over — skip the merge's own distinct pass
             touched_buckets=touched,

@@ -130,15 +130,11 @@ class DedupRegistry:
                 F.lit("I").alias("op"),
             )
         )
-        # observe_stats=False: a fully-replayed delta yields ZERO new
-        # hashes, and a merge-write Observation never completes on an
-        # empty relation (the obs.get hang class erase_where documents)
         merge_into(
             self.table,
             new_rows,
             batch_id=batch_id,
             max_offset=batch_id,
-            observe_stats=False,
             # new_rows' hashes are a subset of the probed batch's, so
             # the probe's touched set covers the merge — skips a second
             # key-distinct pass over the batch
@@ -354,7 +350,6 @@ class NearDupRegistry:
                 ),
                 batch_id=batch_id,
                 max_offset=batch_id,
-                observe_stats=False,
                 # the probe's band-bucket set IS the merge's footprint
                 touched_buckets=touched,
             )

@@ -6,7 +6,11 @@ thin: Structured Streaming supplies micro-batch boundaries, epoch ids,
 and source-offset tracking; ``foreachBatch`` hands each bounded slice
 to the same ``CdcPipeline.apply_batch`` used in batch mode. This is
 the standard Spark pattern for exactly-once upsert sinks (foreachBatch
-+ idempotent MERGE keyed on epoch id).
++ idempotent MERGE keyed on epoch id). An epoch takes the same
+observed path as a batch-mode micro-batch, so its checkpoint record
+carries the same lineage and `rows_written`/`tombstones`; the only
+extra Spark job per epoch is the offset-bounds collect that names its
+range.
 
 The reference's "streaming" is bounded-memory pull parsing with no
 event-time semantics (SURVEY.md §2.3); late/out-of-order data in the
@@ -19,13 +23,16 @@ runs unwatermarked with complete per-epoch application.
 from __future__ import annotations
 
 import os
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from omniparser_spark.cdc.pipeline import CdcPipeline
 from omniparser_spark.lake.durable import atomic_write
+from omniparser_spark.operators.normalize import canon_from_cdc_envelope
+from omniparser_spark.sources.debezium import decode_debezium
+from omniparser_spark.sources.maxwell import decode_canal, decode_maxwell
 
 
 def _stable_base_batch_id(pipeline: CdcPipeline, checkpoint_dir: str) -> int:
@@ -77,65 +84,17 @@ def run_streaming_apply(
     Processes everything currently available, then stops (tests/bench);
     a production deployment keeps the query running.
     """
-    spark = pipeline.spark
-    results: list[dict[str, Any]] = []
-
-    # foreachBatch runs actions on a cloned session whose listener
-    # events never complete an Observation future — force the
-    # groupBy-lineage fallback inside the stream (same results, one
-    # extra small job per epoch) and skip merge-side stat observation
-    # (those epochs record null rows_written/tombstones).
-    saved_parts = pipeline.n_source_parts
-    saved_observe = pipeline.observe_merge
-    pipeline.n_source_parts = None
-    pipeline.observe_merge = False
-
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(feed_path)
+    return _run_epochs(
+        pipeline, feed_path, feed_schema, max_files_per_trigger,
+        after_epoch, decode=lambda batch_df: (batch_df, None),
     )
 
-    # base pinned at stream creation (NOT re-read per restart): batch id
-    # = base + epoch_id stays stable across crash replays, so the batch
-    # fence makes a re-delivered epoch a complete no-op.
-    stream_cp = f"{pipeline.checkpoints.path}/_stream_checkpoint"
-    base_batch_id = _stable_base_batch_id(pipeline, stream_cp)
 
-    def apply_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        bounds = batch_df.agg(
-            F.min("offset").alias("lo"), F.max("offset").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is None:
-            return
-        rec = pipeline.apply_batch(
-            batch_df,
-            batch_id=base_batch_id + epoch_id,
-            offset_start=int(bounds["lo"]),
-            offset_end=int(bounds["hi"]),
-        )
-        results.append(rec)
-        # post-epoch hook: downstream maintenance that must track the
-        # stream (materialized-view syncs, export ticks). Runs AFTER
-        # the epoch's fenced commit, so a crash inside the hook
-        # replays the epoch as a fenced no-op and the hook re-runs
-        # against identical table state — hooks must be idempotent
-        # (the view syncs are: they fence on the view's own frontier).
-        if after_epoch is not None:
-            after_epoch(rec)
-
-    try:
-        q = (
-            stream.writeStream.foreachBatch(apply_epoch)
-            .option("checkpointLocation", stream_cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        pipeline.n_source_parts = saved_parts
-        pipeline.observe_merge = saved_observe
-    return results
+_DIALECT_DECODERS = {
+    "debezium": decode_debezium,
+    "maxwell": decode_maxwell,
+    "canal": decode_canal,
+}
 
 
 def run_streaming_cdc_topic(
@@ -161,73 +120,76 @@ def run_streaming_cdc_topic(
     epoch-derived batch id. Offset bounds come from the DECODED
     offsets, so the checkpoint records the true source positions.
     """
-    from omniparser_spark.operators.normalize import (
-        canon_from_cdc_envelope,
+    decoder = _DIALECT_DECODERS.get(dialect)
+    if decoder is None:
+        raise ValueError(
+            f"unknown dialect {dialect!r}: one of "
+            + "/".join(_DIALECT_DECODERS)
+        )
+    return _run_epochs(
+        pipeline, feed_path, feed_schema, max_files_per_trigger,
+        after_epoch,
+        decode=lambda batch_df: (
+            None, canon_from_cdc_envelope(decoder(batch_df), dialect)
+        ),
     )
 
-    decoders = {"debezium": None, "maxwell": None, "canal": None}
-    if dialect == "debezium":
-        from omniparser_spark.sources.debezium import decode_debezium
 
-        decoders[dialect] = decode_debezium
-    elif dialect == "maxwell":
-        from omniparser_spark.sources.maxwell import decode_maxwell
-
-        decoders[dialect] = decode_maxwell
-    elif dialect == "canal":
-        from omniparser_spark.sources.maxwell import decode_canal
-
-        decoders[dialect] = decode_canal
-    else:
-        raise ValueError(
-            f"unknown dialect {dialect!r}: one of debezium/maxwell/canal"
-        )
-    decode = decoders[dialect]
-
-    spark = pipeline.spark
+def _run_epochs(
+    pipeline: CdcPipeline,
+    feed_path: str,
+    feed_schema: str,
+    max_files_per_trigger: int,
+    after_epoch,
+    decode: Callable[[DataFrame], tuple[DataFrame | None, DataFrame | None]],
+) -> list[dict[str, Any]]:
+    """The one epoch loop behind both wrappers. `decode(batch_df)` ->
+    (raw, canon_or_None), as `apply_batch` takes them; the epoch's
+    offset bounds come from the canon frame when given, else the raw
+    one. Each epoch then takes `apply_batch`'s observed path, so its
+    record carries lineage and merge counts like a batch-mode one."""
     results: list[dict[str, Any]] = []
-    saved_parts = pipeline.n_source_parts
-    saved_observe = pipeline.observe_merge
-    pipeline.n_source_parts = None
-    pipeline.observe_merge = False
-
     stream = (
-        spark.readStream.schema(feed_schema)
+        pipeline.spark.readStream.schema(feed_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(feed_path)
     )
-    # same pinned-base discipline as run_streaming_apply: replayed
-    # epochs must re-present their original batch id to the fence.
+
+    # base pinned at stream creation (NOT re-read per restart): batch id
+    # = base + epoch_id stays stable across crash replays, so the batch
+    # fence makes a re-delivered epoch a complete no-op.
     stream_cp = f"{pipeline.checkpoints.path}/_stream_checkpoint"
     base_batch_id = _stable_base_batch_id(pipeline, stream_cp)
 
     def apply_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        canon = canon_from_cdc_envelope(decode(batch_df), dialect)
-        bounds = canon.agg(
+        raw, canon = decode(batch_df)
+        bounds = (raw if canon is None else canon).agg(
             F.min("offset").alias("lo"), F.max("offset").alias("hi")
         ).collect()[0]
         if bounds["lo"] is None:
             return
         rec = pipeline.apply_batch(
-            raw=None,
+            raw,
             batch_id=base_batch_id + epoch_id,
             offset_start=int(bounds["lo"]),
             offset_end=int(bounds["hi"]),
             _canon=canon,
         )
         results.append(rec)
-        if after_epoch is not None:  # same idempotent-hook contract
+        # post-epoch hook: downstream maintenance that must track the
+        # stream (materialized-view syncs, export ticks). Runs AFTER
+        # the epoch's fenced commit, so a crash inside the hook
+        # replays the epoch as a fenced no-op and the hook re-runs
+        # against identical table state — hooks must be idempotent
+        # (the view syncs are: they fence on the view's own frontier).
+        if after_epoch is not None:
             after_epoch(rec)
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(apply_epoch)
-            .option("checkpointLocation", stream_cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        pipeline.n_source_parts = saved_parts
-        pipeline.observe_merge = saved_observe
+    q = (
+        stream.writeStream.foreachBatch(apply_epoch)
+        .option("checkpointLocation", stream_cp)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return results

@@ -328,13 +328,7 @@ def run_continuous_rollup(
             F.lit(epoch_id).cast("long").alias("offset"),
             F.lit("U").alias("op"),
         )
-        merge_into(
-            table,
-            batch,
-            batch_id=epoch_id,
-            max_offset=epoch_id,
-            observe_stats=False,  # foreachBatch clone: no Observation
-        )
+        merge_into(table, batch, batch_id=epoch_id, max_offset=epoch_id)
 
     q = (
         rolled.writeStream.outputMode("update")

@@ -111,7 +111,8 @@ def test_batch_size_invariance(spark, feed_df, tmp_path, feed_events):
 def test_idempotent_reapply(spark, feed_df, tmp_path):
     """Re-applying an already-committed batch is fenced to a no-op."""
     p = CdcPipeline(
-        spark, str(tmp_path / "idem_table"), str(tmp_path / "idem_ckpt"), n_buckets=4
+        spark, str(tmp_path / "idem_table"), str(tmp_path / "idem_ckpt"), n_buckets=4,
+        n_source_parts=SPEC.n_source_parts
     )
     feed = _feed_for_range(feed_df)
     raw = feed(0, 499)
@@ -140,7 +141,10 @@ def test_resume_from_checkpoint(spark, feed_df, tmp_path, feed_events):
     from the checkpoint and converges to the same final state."""
     table_path = str(tmp_path / "res_table")
     ckpt_path = str(tmp_path / "res_ckpt")
-    p1 = CdcPipeline(spark, table_path, ckpt_path, n_buckets=8)
+    p1 = CdcPipeline(
+        spark, table_path, ckpt_path, n_buckets=8,
+        n_source_parts=SPEC.n_source_parts,
+    )
     feed = _feed_for_range(feed_df)
     # run only the first 3 of 10 batches, then "crash"
     off, bid = 0, 0
@@ -148,7 +152,10 @@ def test_resume_from_checkpoint(spark, feed_df, tmp_path, feed_events):
         p1.apply_batch(feed(off, off + 149), bid, off, off + 149)
         off, bid = off + 150, bid + 1
 
-    p2 = CdcPipeline(spark, table_path, ckpt_path, n_buckets=8)
+    p2 = CdcPipeline(
+        spark, table_path, ckpt_path, n_buckets=8,
+        n_source_parts=SPEC.n_source_parts,
+    )
     assert p2.checkpoints.next_offset() == 450
     p2.run(feed, SPEC.n_events, batch_size=150)
     assert _spark_rows(p2.read_table()) == sorted(_oracle_rows(feed_events))
@@ -159,7 +166,10 @@ def test_crash_between_commit_and_checkpoint(spark, feed_df, tmp_path, feed_even
     the replay; state still converges."""
     table_path = str(tmp_path / "crash_table")
     ckpt_path = str(tmp_path / "crash_ckpt")
-    p = CdcPipeline(spark, table_path, ckpt_path, n_buckets=8)
+    p = CdcPipeline(
+        spark, table_path, ckpt_path, n_buckets=8,
+        n_source_parts=SPEC.n_source_parts,
+    )
     feed = _feed_for_range(feed_df)
     p.apply_batch(feed(0, 299), 0, 0, 299)
     # simulate: batch 1 merged into the table, but checkpoint write lost
@@ -170,7 +180,10 @@ def test_crash_between_commit_and_checkpoint(spark, feed_df, tmp_path, feed_even
     good, _ = normalize_changes(feed(300, 599))
     merge_into(p.table, lww_dedup(good), batch_id=1)
     # restart: checkpoint says resume at offset 300 / batch 1
-    p2 = CdcPipeline(spark, table_path, ckpt_path, n_buckets=8)
+    p2 = CdcPipeline(
+        spark, table_path, ckpt_path, n_buckets=8,
+        n_source_parts=SPEC.n_source_parts,
+    )
     assert p2.checkpoints.next_batch_id() == 1
     p2.run(feed, SPEC.n_events, batch_size=300)
     assert _spark_rows(p2.read_table()) == sorted(_oracle_rows(feed_events))
@@ -284,7 +297,8 @@ def test_crash_at_every_durable_write(
 
 def test_lineage_manifests(spark, feed_df, tmp_path):
     p = CdcPipeline(
-        spark, str(tmp_path / "lin_table"), str(tmp_path / "lin_ckpt"), n_buckets=4
+        spark, str(tmp_path / "lin_table"), str(tmp_path / "lin_ckpt"), n_buckets=4,
+        n_source_parts=SPEC.n_source_parts
     )
     feed = _feed_for_range(feed_df)
     rec = p.apply_batch(feed(0, 399), 0, 0, 399)
@@ -306,7 +320,7 @@ def test_schema_evolution_additive(spark, feed_df, tmp_path, feed_events):
         spark,
         table_path,
         str(tmp_path / "evo_ckpt"),
-        n_buckets=8,
+        n_buckets=8, n_source_parts=SPEC.n_source_parts,
         with_tool_column=False,
     )
     evolve_at = int(SPEC.n_events * SPEC.evolution_frac)
@@ -333,25 +347,74 @@ def test_schema_evolution_additive(spark, feed_df, tmp_path, feed_events):
     assert n_tools_got > 0
 
 
-def test_fast_and_fallback_paths_agree(spark, feed_df, tmp_path, feed_events):
-    """The one-job observed path (n_source_parts given) and the two-job
-    groupBy-lineage fallback must produce identical final state AND
-    identical lineage manifests."""
-    fast = _run_pipeline(spark, feed_df, tmp_path, batch_size=400, name="fast")
-    slow = CdcPipeline(
-        spark,
-        str(tmp_path / "slow_table"),
-        str(tmp_path / "slow_ckpt"),
-        n_buckets=8,
+def _groupby_lineage(canon):
+    """Lineage, events_in and quarantined of one decoded slice, computed
+    independently of the engine's observed aggregates."""
+    ok = F.col("_ok")
+    rows = (
+        canon.groupBy("source_part")
+        .agg(
+            F.count(F.when(ok, 1)).alias("rows"),
+            F.min(F.when(ok, F.col("offset"))).alias("offset_min"),
+            F.max(F.when(ok, F.col("offset"))).alias("offset_max"),
+            F.count(F.when(~ok, 1)).alias("bad"),
+        )
+        .collect()
     )
-    slow.run(_feed_for_range(feed_df), SPEC.n_events, batch_size=400)
-    assert _spark_rows(fast.read_table()) == _spark_rows(slow.read_table())
-    fast_recs = fast.checkpoints.all()
-    slow_recs = slow.checkpoints.all()
-    for fr, sr in zip(fast_recs, slow_recs):
-        assert fr["lineage"] == sr["lineage"]
-        assert fr["events_in"] == sr["events_in"]
-        assert fr["quarantined"] == sr["quarantined"]
+    lineage = sorted(
+        (
+            {
+                "source_part": r["source_part"],
+                "rows": r["rows"],
+                "offset_min": r["offset_min"],
+                "offset_max": r["offset_max"],
+            }
+            for r in rows
+            if r["rows"] > 0
+        ),
+        key=lambda d: d["source_part"],
+    )
+    return lineage, sum(r["rows"] for r in rows), sum(r["bad"] for r in rows)
+
+
+def test_observed_lineage_matches_groupby(spark, feed_df, tmp_path):
+    """Every record's observed lineage, events_in and quarantined equal
+    a groupBy over that batch's decoded slice."""
+    from omniparser_spark.operators.normalize import normalize_flagged
+
+    p = _run_pipeline(spark, feed_df, tmp_path, batch_size=400, name="lin")
+    recs = p.checkpoints.all()
+    assert len(recs) == 4
+    feed = _feed_for_range(feed_df)
+    for rec in recs:
+        slice_ = feed(rec["offset_start"], rec["offset_end"])
+        lineage, events_in, bad = _groupby_lineage(normalize_flagged(slice_))
+        assert rec["lineage"] == lineage, rec["batch_id"]
+        assert rec["events_in"] == events_in, rec["batch_id"]
+        assert rec["quarantined"] == bad, rec["batch_id"]
+
+
+def test_lineage_counts_parts_outside_domain(spark, feed_df, tmp_path):
+    """Rows whose source_part is outside [0, n_source_parts), or NULL,
+    are applied, so lineage must count them: one overflow entry
+    (source_part None) keeps the lineage rows summing to events_in."""
+    n_parts = 3
+    p = CdcPipeline(
+        spark, str(tmp_path / "ovf_table"), str(tmp_path / "ovf_ckpt"),
+        n_buckets=4, n_source_parts=n_parts,
+    )
+    raw = _feed_for_range(feed_df)(0, 399).withColumn(
+        "source_part",
+        F.when(F.col("offset") % 10 == 0, F.lit(None).cast("int"))
+        .otherwise(F.col("source_part")),
+    )
+    rec = p.apply_batch(raw, 0, 0, 399)
+    lineage = rec["lineage"]
+    assert [d["source_part"] for d in lineage] == [*range(n_parts), None]
+    assert sum(d["rows"] for d in lineage) == rec["events_in"]
+    overflow = lineage[-1]
+    assert overflow["rows"] > 0
+    assert 0 <= overflow["offset_min"] <= overflow["offset_max"] <= 399
 
 
 def test_snapshot_expiry_bounds_disk(spark, feed_df, tmp_path, feed_events):
@@ -590,7 +653,10 @@ def test_grown_feed_crash_repair_does_not_skip_new_events(
 
     table_path = str(tmp_path / "grown_table")
     ckpt_path = str(tmp_path / "grown_ckpt")
-    p = CdcPipeline(spark, table_path, ckpt_path, n_buckets=8)
+    p = CdcPipeline(
+        spark, table_path, ckpt_path, n_buckets=8,
+        n_source_parts=SPEC.n_source_parts,
+    )
     feed = _feed_for_range(feed_df)
     # run to a truncated total: last batch [1200, 1399] is clamped
     p.run(feed, 1400, batch_size=600)
@@ -604,7 +670,10 @@ def test_grown_feed_crash_repair_does_not_skip_new_events(
     with open(os.path.join(ckpt_path, "latest.json"), "w") as fh:
         json.dump(prev, fh)
     # restart against the GROWN feed (full 1500 events)
-    p2 = CdcPipeline(spark, table_path, ckpt_path, n_buckets=8)
+    p2 = CdcPipeline(
+        spark, table_path, ckpt_path, n_buckets=8,
+        n_source_parts=SPEC.n_source_parts,
+    )
     recs2 = p2.run(feed, SPEC.n_events, batch_size=600)
     fenced = [r for r in recs2 if r["fenced"]]
     assert fenced and fenced[0]["offset_end"] == 1399  # clamped repair

@@ -359,6 +359,7 @@ def test_canon_adapter_quarantines_and_replays(spark, tmp_path):
     base = 1 << 32
     pipe = CdcPipeline(
         spark, str(tmp_path / "t"), str(tmp_path / "c"), n_buckets=4,
+        n_source_parts=3,
         quarantine_path=str(tmp_path / "dead"),
     )
     rec = pipe.apply_batch(

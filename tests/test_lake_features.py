@@ -1135,6 +1135,7 @@ def test_parallel_bootstrap_then_compact_cdf_neutral(spark, tmp_path):
 
     p = CdcPipeline(
         spark, str(tmp_path / "t"), str(tmp_path / "ckpt"), n_buckets=4,
+        n_source_parts=8,
     )
     snapshot = spark.createDataFrame(
         [

@@ -189,8 +189,9 @@ def test_caller_supplied_touched_buckets(spark, tmp_path):
     exactly the cover, MOR places the delta over it. A SUPERSET is
     sound (an extra rewritten bucket carries through the LWW union
     unchanged) and final state must be identical to the self-pruned
-    merge."""
-    from omniparser_spark.lake.table import bucket_footprint
+    merge. Empty batches (three shapes) then merge with observed
+    zero counts and still advance the fence."""
+    from omniparser_spark.lake.table import bucket_footprint, fixed_shape_job
 
     hot_keys = [f"c{i}" for i in range(7)]
     hot_buckets = bucket_footprint(
@@ -237,6 +238,25 @@ def test_caller_supplied_touched_buckets(spark, tmp_path):
         assert r_super["touched_buckets"] == (
             superset if mode == "cow" else hot_buckets
         )
+
+        # empty writes, observed under the apply loop's AQE scope: each
+        # commits, counts 0 and advances the batch fence
+        one = _batch(spark, [("c0", 3, 500)])
+        empties = [
+            spark.createDataFrame([], BATCH_SCHEMA),
+            one.filter(F.lit(False)),
+            one.filter(F.col("offset") < 0)
+            .groupBy("conv_id", "turn_idx", "role", "text", "tool", "ts", "op")
+            .agg(F.max("offset").alias("offset")),
+        ]
+        with fixed_shape_job(spark):
+            for batch_id, empty in enumerate(empties, start=2):
+                rec = merge_into(t_ctrl, empty, batch_id=batch_id,
+                                 max_offset=406, mode=mode)
+                assert rec["rows_written"] == 0, (mode, batch_id)
+                assert rec["tombstones"] == 0, (mode, batch_id)
+                assert int(t_ctrl.summary()["batch_id"]) == batch_id
+        assert state(t_ctrl) == ref
 
 
 def test_lake_reads_no_env_vars():

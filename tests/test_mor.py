@@ -309,9 +309,8 @@ def test_erase_where_folds_touched_buckets_deltas(spark, tmp_path):
 
 def test_streaming_apply_mor_converges(spark, tmp_path):
     """The streaming front-end composes with merge-on-read: a MOR
-    pipeline driven by foreachBatch epochs (Observation stats off,
-    cloned session) converges to the batch COW state, with deltas
-    folding on the pipeline cadence."""
+    pipeline driven by foreachBatch epochs converges to the batch COW
+    state, with deltas folding on the pipeline cadence."""
     from omniparser_spark.sources.changefeed import materialize_feed
     from omniparser_spark.streaming import run_streaming_apply
 
@@ -320,7 +319,8 @@ def test_streaming_apply_mor_converges(spark, tmp_path):
     feed = materialize_feed(spark, spec, feed_path, num_partitions=6)
 
     pb = CdcPipeline(
-        spark, str(tmp_path / "bt"), str(tmp_path / "bc"), n_buckets=4
+        spark, str(tmp_path / "bt"), str(tmp_path / "bc"), n_buckets=4,
+        n_source_parts=spec.n_source_parts
     )
     pb.run(
         lambda s, e: feed.filter(
@@ -338,6 +338,7 @@ def test_streaming_apply_mor_converges(spark, tmp_path):
 
     ps = CdcPipeline(
         spark, str(tmp_path / "st"), str(tmp_path / "sc"), n_buckets=4,
+        n_source_parts=spec.n_source_parts,
         merge_mode="mor", compact_every=2,
     )
     recs = run_streaming_apply(ps, feed_path, max_files_per_trigger=2)

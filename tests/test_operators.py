@@ -85,7 +85,10 @@ def test_streaming_apply(spark, tmp_path):
     feed = materialize_feed(spark, spec, feed_path, num_partitions=6)
 
     # batch reference run
-    pb = CdcPipeline(spark, str(tmp_path / "bt"), str(tmp_path / "bc"), n_buckets=4)
+    pb = CdcPipeline(
+        spark, str(tmp_path / "bt"), str(tmp_path / "bc"), n_buckets=4,
+        n_source_parts=spec.n_source_parts,
+    )
     pb.run(
         lambda s, e: feed.filter((F.col("offset") >= s) & (F.col("offset") <= e)),
         spec.n_events,
@@ -98,7 +101,10 @@ def test_streaming_apply(spark, tmp_path):
         .collect()
     )
 
-    ps = CdcPipeline(spark, str(tmp_path / "st"), str(tmp_path / "sc"), n_buckets=4)
+    ps = CdcPipeline(
+        spark, str(tmp_path / "st"), str(tmp_path / "sc"), n_buckets=4,
+        n_source_parts=spec.n_source_parts,
+    )
     recs = run_streaming_apply(ps, feed_path, max_files_per_trigger=2)
     assert recs, "stream should have applied at least one epoch"
     got = sorted(

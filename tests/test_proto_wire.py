@@ -238,7 +238,8 @@ def test_streaming_apply_proto_feed(spark, tmp_path):
     feed = spark.read.parquet(feed_path)
 
     pb = CdcPipeline(
-        spark, str(tmp_path / "bt"), str(tmp_path / "bc"), n_buckets=4
+        spark, str(tmp_path / "bt"), str(tmp_path / "bc"), n_buckets=4,
+        n_source_parts=4
     )
     pb.run(
         lambda s, e: feed.filter(
@@ -256,7 +257,8 @@ def test_streaming_apply_proto_feed(spark, tmp_path):
     assert want, "batch reference must apply proto rows"
 
     ps = CdcPipeline(
-        spark, str(tmp_path / "st"), str(tmp_path / "sc"), n_buckets=4
+        spark, str(tmp_path / "st"), str(tmp_path / "sc"), n_buckets=4,
+        n_source_parts=4
     )
     recs = run_streaming_apply(ps, feed_path, max_files_per_trigger=3)
     assert recs

@@ -181,7 +181,7 @@ def test_stream_epoch_replay_is_noop_including_side_outputs(
     qp = str(tmp_path / "dead")
     ps = CdcPipeline(
         spark, str(tmp_path / "st"), str(tmp_path / "sc"),
-        n_buckets=4, quarantine_path=qp,
+        n_buckets=4, n_source_parts=8, quarantine_path=qp,
     )
     recs1 = run_streaming_apply(ps, feed_path, max_files_per_trigger=2)
     assert len(recs1) >= 2 and not any(r["fenced"] for r in recs1)

@@ -86,6 +86,12 @@ def test_spark_submit_py_files_apply_and_fence(spark, tmp_path):
     assert len(batches) == 2
     assert all(not b["fenced"] for b in batches)
     assert sum(b["events_in"] for b in batches) == n_feed_rows
+    # the CLI derives the source-partition domain from the feed, so
+    # lineage names every part and needs no overflow entry
+    feed_parts = {r[0] for r in feed.select("source_part").distinct().collect()}
+    for b in batches:
+        assert sum(d["rows"] for d in b["lineage"]) == b["events_in"]
+    assert {d["source_part"] for b in batches for d in b["lineage"]} == feed_parts
 
     table = LakeTable.load(spark, str(tmp_path / "table"))
     rows_after_first = table.read().count()

@@ -95,6 +95,12 @@ def test_streaming_soak_maintenance_bounded(spark, tmp_path):
                                after_epoch=after_epoch)
     assert len(recs) == n_epochs, "one applied epoch per feed file"
     assert not any(r.get("fenced") for r in recs)
+    # epochs take the observed apply path: merge counts and lineage
+    # (parts >= n_source_parts in its overflow entry) on every record
+    for r in recs:
+        assert isinstance(r["rows_written"], int) and r["rows_written"] > 0
+        assert isinstance(r["tombstones"], int)
+        assert sum(d["rows"] for d in r["lineage"]) == r["events_in"]
 
     # ---- state correctness after all that maintenance ----
     ref = CdcPipeline(

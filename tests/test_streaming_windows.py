@@ -459,7 +459,8 @@ def test_streaming_cdc_topic_converges(spark, tmp_path):
 
     # reference: one batch through the same adapter
     ref = CdcPipeline(
-        spark, str(tmp_path / "rt"), str(tmp_path / "rc"), n_buckets=4
+        spark, str(tmp_path / "rt"), str(tmp_path / "rc"), n_buckets=4,
+        n_source_parts=4
     )
     feed_df = spark.read.parquet(feed_path)
     canon = canon_from_cdc_envelope(decode_maxwell(feed_df), "maxwell")
@@ -475,6 +476,7 @@ def test_streaming_cdc_topic_converges(spark, tmp_path):
 
     sp = CdcPipeline(
         spark, str(tmp_path / "st"), str(tmp_path / "sc"), n_buckets=4,
+        n_source_parts=4,
         quarantine_path=str(tmp_path / "dead"),
     )
     hook_calls = []
