@@ -13,11 +13,18 @@ partitioned micro-batches:
     json.Marshal -> caller          LWW dedup -> MERGE INTO lake table
     (no state)                      checkpoint {offsets, lineage, snapshot}
 
-Restart semantics: `run()` always resumes from the checkpoint store's
-`offset_end + 1`; a batch that committed to the table but crashed
-before the checkpoint write is caught by the table-side batch-id fence
-(merge returns None) and the checkpoint is repaired — between the two
-fences every event is applied exactly once.
+Restart semantics, one rule per fence:
+- the grid drivers (`run`, `run_feed` and the routed fan-out, all
+  through `drive`) place their batches by the OFFSET FRONTIER: resume
+  at the checkpoint's `offset_end + 1`, skip or trim what a destination
+  already committed;
+- every driver, streaming included, passes the table BATCH-ID fence in
+  `apply_batch`: a batch that committed to the table but crashed before
+  its checkpoint write is a no-op whose repair checkpoint clamps to the
+  table's applied frontier.
+Between the two fences every event is applied exactly once. Streaming
+epochs keep only the id fence: their offsets interleave across epochs,
+so an offset frontier would drop events (`streaming/stream.py`).
 """
 
 from __future__ import annotations
@@ -110,15 +117,36 @@ class CdcPipeline:
         self.compact_every = max(int(compact_every), 1)
         self._batches_since_compaction = 0
         # routing hook (cdc/routing.py): a predicate builder over the
-        # CANONICAL columns applied whenever this pipeline decodes raw
-        # rows itself (apply_batch without _canon — notably
-        # replay_quarantine). Bad rows (~_ok) are always kept so the
-        # dead-letter capture still sees them. Without this, a routed
-        # destination's quarantine REPLAY would merge every recovered
-        # row — including other routes' — into its own table.
+        # CANONICAL columns applied to every batch this pipeline
+        # applies, prebuilt canon or self-decoded (replay_quarantine).
+        # Bad rows (~_ok) are always kept so the dead-letter capture
+        # still sees them. Without this, a routed destination's
+        # quarantine REPLAY would merge every recovered row — including
+        # other routes' — into its own table.
         self.canon_filter: Callable[[], Any] | None = None
 
     # ---------- single micro-batch ----------
+
+    def _fenced_record(
+        self, batch_id: int | None, offset_start: int, offset_end: int
+    ) -> dict[str, Any]:
+        """The record of a batch this pipeline did not apply: an
+        id-fence repair (`batch_id` set, checkpointed) or a grid batch
+        already behind its offset frontier (`batch_id` None, not
+        checkpointed)."""
+        return {
+            "batch_id": batch_id,
+            "offset_start": offset_start,
+            "offset_end": offset_end,
+            "events_in": 0,
+            "quarantined": 0,
+            "rows_written": 0,
+            "tombstones": 0,
+            "fenced": True,
+            "snapshot_version": self.table.current().version,
+            "touched_buckets": [],
+            "lineage": [],
+        }
 
     def apply_batch(
         self,
@@ -138,7 +166,8 @@ class CdcPipeline:
         `_canon`: pre-built normalize_flagged frame for this slice
         (run_feed's fast path — constructing the decode expression tree
         costs ~0.5 s of serial py4j driver time per call, so the loop
-        builds it once over the whole feed and slices per batch)."""
+        builds it once over the whole feed and slices per batch).
+        `canon_filter`, when set, applies to it as to a self-decode."""
         # batch fence up front: a re-delivered batch must be a complete
         # no-op — including its quarantine append and metrics — not just
         # a skipped MERGE (exactly-once covers side outputs too).
@@ -152,31 +181,16 @@ class CdcPipeline:
             # under the next batch id instead of silently skipped.
             applied_max = int(summary.get("max_offset_applied", offset_end))
             safe_end = max(offset_start - 1, min(offset_end, applied_max))
-            record: dict[str, Any] = {
-                "batch_id": batch_id,
-                "offset_start": offset_start,
-                "offset_end": safe_end,
-                "events_in": 0,
-                "quarantined": 0,
-                "rows_written": 0,
-                "tombstones": 0,
-                "fenced": True,
-                "snapshot_version": self.table.current().version,
-                "touched_buckets": [],
-                "lineage": [],
-            }
+            record = self._fenced_record(batch_id, offset_start, safe_end)
             # still checkpoint: this is the crashed-between-commit-and-
             # checkpoint repair path (see module docstring).
             self.checkpoints.commit(record)
             self.metrics.record(record)
             return record
 
-        if _canon is not None:
-            canon = _canon
-        else:
-            canon = normalize_flagged(raw)
-            if self.canon_filter is not None:
-                canon = canon.filter(self.canon_filter() | ~F.col("_ok"))
+        canon = normalize_flagged(raw) if _canon is None else _canon
+        if self.canon_filter is not None:
+            canon = canon.filter(self.canon_filter() | ~F.col("_ok"))
 
         # No Spark job of its own: lineage, quarantine count and
         # events_in are observed DURING the merge's (or the dead-letter
@@ -318,50 +332,10 @@ class CdcPipeline:
         tests and bench use the deterministic generator or a parquet
         slice — both are pure functions of the range).
         """
-        return self._drive(
-            lambda s, e: (feed_for_range(s, e), None),
+        return drive(
+            [self], lambda s, e: (feed_for_range(s, e), None),
             total_events, batch_size, evolve_at_offset, evolved_columns,
-        )
-
-    def _drive(
-        self,
-        make_slices: Callable[[int, int], tuple[DataFrame, DataFrame | None]],
-        total_events: int,
-        batch_size: int,
-        evolve_at_offset: int | None,
-        evolved_columns: T.StructType | None,
-    ) -> list[dict[str, Any]]:
-        """The one exactly-once driver loop shared by run()/run_feed():
-        AQE toggle, checkpoint resume, evolve trigger, batch iteration.
-        `make_slices(start, end)` -> (raw_slice, canon_slice_or_None)."""
-        results: list[dict[str, Any]] = []
-        offset = self.checkpoints.next_offset()
-        batch_id = self.checkpoints.next_batch_id()
-        # AQE off for the apply loop: every shuffle otherwise becomes a
-        # separately-materialized query stage with a driver replan
-        # (~0.5s serial per batch). The loop's shapes are fully known
-        # (partition counts sized in session.py; skewed keys collapse
-        # in the merge's map-side partial agg), so AQE only adds
-        # latency here. Restored afterwards for ad-hoc queries.
-        with fixed_shape_job(self.spark):
-            while offset < total_events:
-                end = min(offset + batch_size - 1, total_events - 1)
-                if (
-                    evolve_at_offset is not None
-                    and evolved_columns is not None
-                    and end >= evolve_at_offset
-                ):
-                    self.table.evolve_schema_additive(evolved_columns)
-                raw, canon = make_slices(offset, end)
-                rec = self.apply_batch(raw, batch_id, offset, end, _canon=canon)
-                results.append(rec)
-                # advance from the RECORD's frontier, not the grid's: a
-                # fenced repair clamps offset_end to what the table
-                # actually applied (grown-feed crash recovery), and the
-                # un-applied tail must re-drive in THIS run
-                offset = int(rec["offset_end"]) + 1
-                batch_id += 1
-        return results
+        )[0]
 
     def run_feed(
         self,
@@ -370,7 +344,6 @@ class CdcPipeline:
         batch_size: int,
         evolve_at_offset: int | None = None,
         evolved_columns: T.StructType | None = None,
-        canon_filter: Callable[[], Any] | None = None,
     ) -> list[dict[str, Any]]:
         """`run` over a materialized feed DataFrame (parquet scan of the
         envelope columns), with the decode/normalize expression tree
@@ -380,25 +353,11 @@ class CdcPipeline:
         limits scaling efficiency at high parallelism — the offset
         range predicate still pushes through the decode projections and
         per-format union to the parquet scan (asserted in
-        tests/test_plans.py).
-
-        `canon_filter`: optional predicate builder over the CANONICAL
-        (post-decode) columns, applied to every batch — the routing
-        hook (cdc/routing.py). It sees the `_ok` flag too: content
-        routes cannot classify undecodable rows, so those follow the
-        route's `_ok` handling (a `~_ok` catch-all destination keeps
-        them; otherwise they are dropped from routed destinations)."""
-        canon_full = normalize_flagged(feed)
-        if canon_filter is not None:
-            canon_full = canon_full.filter(canon_filter())
-
-        def slices(start: int, end: int):
-            rng = (F.col("offset") >= start) & (F.col("offset") <= end)
-            return feed.filter(rng), canon_full.filter(rng)
-
-        return self._drive(
-            slices, total_events, batch_size, evolve_at_offset, evolved_columns
-        )
+        tests/test_plans.py)."""
+        return drive(
+            [self], feed_slices(feed, normalize_flagged(feed)),
+            total_events, batch_size, evolve_at_offset, evolved_columns,
+        )[0]
 
     def replay_quarantine(self) -> dict[str, Any] | None:
         """Reprocess every dead-lettered batch through the CURRENT
@@ -592,3 +551,114 @@ class CdcPipeline:
 
     def read_table(self) -> DataFrame:
         return self.table.read()
+
+
+def feed_slices(
+    feed: DataFrame, canon_full: DataFrame
+) -> Callable[[int, int], tuple[DataFrame, DataFrame]]:
+    """`drive`'s `make_slices` over a materialized feed and its decode
+    tree built once: each batch is an offset-range filter of both."""
+
+    def slices(start: int, end: int) -> tuple[DataFrame, DataFrame]:
+        rng = (F.col("offset") >= start) & (F.col("offset") <= end)
+        return feed.filter(rng), canon_full.filter(rng)
+
+    return slices
+
+
+def drive(
+    pipes: list[CdcPipeline],
+    make_slices: Callable[[int, int], tuple[DataFrame, DataFrame | None]],
+    total_events: int,
+    batch_size: int,
+    evolve_at_offset: int | None = None,
+    evolved_columns: T.StructType | None = None,
+) -> list[list[dict[str, Any]]]:
+    """The one exactly-once grid driver: apply the feed up to
+    `total_events` to every pipeline in `pipes`, one batch grid for all
+    of them. `make_slices(start, end)` -> (raw_slice, canon_or_None);
+    without a canon each pipeline decodes the raw slice itself. Returns
+    one record list per pipeline, in `pipes` order.
+
+    Two fences, each with one job:
+    - The OFFSET FRONTIER (each pipeline's checkpoint `next_offset`)
+      places the grid. It starts at the laggard's frontier; a pipeline
+      already past a batch's whole range skips it without a checkpoint
+      write (one would rewind its frontier), and a batch straddling its
+      frontier is trimmed to the uncommitted suffix, so the committed
+      prefix's bad rows are not dead-lettered twice. A grown feed is
+      safe: new offsets lie past every committed frontier.
+    - The table BATCH-ID fence (in `apply_batch`, on every driver)
+      catches a batch whose table commit landed but whose checkpoint
+      did not; its repair checkpoint clamps `offset_end` to the table's
+      applied frontier, and the grid advances to the laggard frontier,
+      so a clamped tail re-drives under the next batch id.
+
+    With one pipeline the straddle and skip never fire, and the grid
+    is `run`'s: resume at the checkpoint, one batch id per batch. The
+    canonical slice is persisted only when several pipelines share it.
+    """
+    results: list[list[dict[str, Any]]] = [[] for _ in pipes]
+
+    def laggard() -> int:
+        return min(p.checkpoints.next_offset() for p in pipes)
+
+    # AQE off for the apply loop: every shuffle otherwise becomes a
+    # separately-materialized query stage with a driver replan
+    # (~0.5s serial per batch). The loop's shapes are fully known
+    # (partition counts sized in session.py; skewed keys collapse
+    # in the merge's map-side partial agg), so AQE only adds
+    # latency here. Restored afterwards for ad-hoc queries.
+    with fixed_shape_job(pipes[0].spark):
+        start = laggard()
+        stalls = 0
+        while start < total_events:
+            end = min(start + batch_size - 1, total_events - 1)
+            if (
+                evolve_at_offset is not None
+                and evolved_columns is not None
+                and end >= evolve_at_offset
+            ):
+                for pipe in pipes:
+                    pipe.table.evolve_schema_additive(evolved_columns)
+            raw, canon = make_slices(start, end)
+            # decode once: the first pipeline's action materializes the
+            # cached slice, the rest read it
+            shared = canon is not None and len(pipes) > 1
+            if shared:
+                canon = canon.persist()
+            try:
+                for pipe, out in zip(pipes, results):
+                    frontier = pipe.checkpoints.next_offset()
+                    if end < frontier:
+                        out.append(pipe._fenced_record(None, start, end))
+                        continue
+                    b_raw, b_canon = raw, canon
+                    if frontier > start:
+                        suffix = F.col("offset") >= frontier
+                        b_raw = raw.filter(suffix)
+                        if canon is not None:
+                            b_canon = canon.filter(suffix)
+                    out.append(pipe.apply_batch(
+                        b_raw, pipe.checkpoints.next_batch_id(),
+                        max(start, frontier), end, _canon=b_canon,
+                    ))
+            finally:
+                if shared:
+                    canon.unpersist()
+            # a repair round may hold the laggard at `start` once per
+            # pipeline (its commit bumps next_batch_id past the table's,
+            # so the following round applies); more rounds than
+            # pipelines without progress is a real wedge
+            nxt = laggard()
+            if nxt <= start:
+                stalls += 1
+                if stalls > len(pipes):
+                    raise RuntimeError(
+                        f"apply loop stalled at offset {start}: "
+                        "no checkpoint frontier is advancing"
+                    )
+            else:
+                stalls = 0
+            start = max(start, nxt)
+    return results

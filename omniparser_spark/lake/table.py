@@ -44,7 +44,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -189,8 +189,8 @@ def fixed_shape_job(spark):
     placement (one shuffle partition per touched bucket — a count AQE
     must not coalesce, and bucket dirs AQE skew-split must not break),
     so adaptive re-planning only adds its per-query-stage latency
-    (measured ~0.25-0.3 s per action at local[32]); the CDC driver
-    loops wrap a whole batch sequence the same way. A no-op when AQE is
+    (measured ~0.25-0.3 s per action at local[32]); the grid driver
+    wraps a whole batch sequence the same way. A no-op when AQE is
     already off, so scopes nest.
 
     The flag is SESSION-GLOBAL conf: this assumes one driver thread
@@ -1631,12 +1631,7 @@ class LakeTable:
                 [(v,) for v in key_values],
                 T.StructType([T.StructField(key_col, key_type)]),
             )
-            buckets = sorted(
-                int(r["b"])
-                for r in vals.select(
-                    bucket_expr(key_col, n_buckets).alias("b")
-                ).distinct().collect()
-            )
+            buckets = bucket_footprint(vals, key_col, n_buckets)
         else:
             buckets = list(range(n_buckets))
 
@@ -1647,18 +1642,13 @@ class LakeTable:
                                 ("_deleted", F.lit(False))):
             if hidden not in target.columns:
                 target = target.withColumn(hidden, default)
+        # the erased count rides the commit write; the filter above the
+        # observed node keeps it firing when the erasure empties its
+        # buckets (observed 0 on empty writes, like merge_into)
+        obs = Observation("erase_where")
         marked = target.withColumn(
             "_erase", F.coalesce(predicate, F.lit(False))
-        )
-        # explicit count, not an Observation: when the erasure empties
-        # its buckets the commit write collapses to an empty relation
-        # and a CollectMetrics node would never fire. Erasure is a rare
-        # maintenance op; one extra scan of the PRUNED buckets is fine.
-        erased = int(
-            marked.agg(
-                F.count(F.when(F.col("_erase"), 1)).alias("e")
-            ).collect()[0]["e"]
-        )
+        ).observe(obs, F.count(F.when(F.col("_erase"), 1)).alias("e"))
         kept = repartition_exact_buckets(
             marked.filter(~F.col("_erase"))
             .drop("_erase")
@@ -1681,7 +1671,7 @@ class LakeTable:
         )
         return {
             "snapshot_version": snap.version,
-            "rows_erased": erased,
+            "rows_erased": int(obs.get["e"]),
             "touched_buckets": buckets,
         }
 

@@ -6,11 +6,15 @@ thin: Structured Streaming supplies micro-batch boundaries, epoch ids,
 and source-offset tracking; ``foreachBatch`` hands each bounded slice
 to the same ``CdcPipeline.apply_batch`` used in batch mode. This is
 the standard Spark pattern for exactly-once upsert sinks (foreachBatch
-+ idempotent MERGE keyed on epoch id). An epoch takes the same
-observed path as a batch-mode micro-batch, so its checkpoint record
-carries the same lineage and `rows_written`/`tombstones`; the only
-extra Spark job per epoch is the offset-bounds collect that names its
-range.
++ idempotent MERGE keyed on epoch id). Epochs keep that batch-id fence
+only, not the grid drivers' offset frontier (``cdc.pipeline.drive``):
+an epoch is a set of files, so a later epoch can carry offsets below an
+earlier one's ``offset_end``, and an offset frontier would drop them
+(pinned in ``test_streaming_cdc_topic_converges``). An epoch takes
+the same observed path as a batch-mode micro-batch, so its checkpoint
+record carries the same lineage and `rows_written`/`tombstones`; the
+only extra Spark job per epoch is the offset-bounds collect that names
+its range.
 
 The reference's "streaming" is bounded-memory pull parsing with no
 event-time semantics (SURVEY.md §2.3); late/out-of-order data in the

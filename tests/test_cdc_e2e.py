@@ -193,9 +193,17 @@ class _InjectedCrash(Exception):
     pass
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize(
+    "mode,driver",
+    [
+        pytest.param("cow", "batch", id="cow"),
+        pytest.param("mor", "batch", id="mor"),
+        # the routed driver in cow only, to bound runtime
+        pytest.param("cow", "routed", id="cow-routed"),
+    ],
+)
 def test_crash_at_every_durable_write(
-    spark, feed_df, tmp_path, feed_events, mode, monkeypatch
+    spark, feed_df, tmp_path, feed_events, mode, driver, monkeypatch
 ):
     """Exactly-once across a failure at EVERY durable write of a batch.
     With expire_every=1 and compact_every=1 one batch runs the whole
@@ -204,30 +212,69 @@ def test_crash_at_every_durable_write(
     For each k the k-th os.replace of batch 1 raises; a fresh pipeline
     then resumes to the end. One more input makes Snapshot.to_json
     raise mid-commit (an in-place metadata write would leave a 0-byte
-    file that wedges every later commit)."""
+    file that wedges every later commit).
+
+    The routed driver fans the feed out to two key-aligned hash routes
+    with quarantine on, over a feed whose every 10th event does not
+    decode; k runs over the writes of both destinations. It resumes on
+    a wider grid than the crashed run's, so uneven frontiers meet
+    offset-fenced skips, straddle trims and id-fence repairs."""
     import os
+    import pathlib
     import shutil
 
     from omniparser_spark.cdc.checkpoints import CheckpointStore
+    from omniparser_spark.cdc.routing import RoutedPipeline
     from omniparser_spark.lake.table import Snapshot
 
     size = SPEC.n_events // 3
+    routed = driver == "routed"
     feed = _feed_for_range(feed_df)
-    want = sorted(_oracle_rows(feed_events))
+    events = feed_events
+    if routed:
+        # every 10th event does not decode: each destination dead-letters it
+        bogus = feed_df.withColumn(
+            "format",
+            F.when(F.col("offset") % 10 == 0, "bogus")
+            .otherwise(F.col("format")),
+        )
+        bad_offsets = sorted(
+            e["offset"] for e in feed_events if e["offset"] % 10 == 0
+        )
+        events = [e for e in feed_events if e["offset"] % 10]
+    want = sorted(_oracle_rows(events))
+
+    def half(i):
+        return lambda: F.pmod(F.xxhash64("conv_id"), F.lit(2)) == i
 
     def pipeline(root):
-        return CdcPipeline(
-            spark, str(root / "table"), str(root / "ckpt"), n_buckets=8,
-            n_source_parts=SPEC.n_source_parts, merge_mode=mode,
-            expire_every=1, compact_every=1,
+        if not routed:
+            return CdcPipeline(
+                spark, str(root / "table"), str(root / "ckpt"), n_buckets=8,
+                n_source_parts=SPEC.n_source_parts, merge_mode=mode,
+                expire_every=1, compact_every=1,
+            )
+        rp = RoutedPipeline(
+            spark, str(root), {"even": half(0), "odd": half(1)},
+            n_buckets=8, n_source_parts=SPEC.n_source_parts,
         )
+        for p in rp.pipes.values():
+            p.expire_every = 1  # the whole protocol in every batch
+        return rp
 
-    def batch1(p):
-        p.apply_batch(feed(size, 2 * size - 1), 1, size, 2 * size - 1)
+    def run_batch(p, i):
+        lo, hi = i * size, (i + 1) * size - 1
+        if routed:
+            p.run_feed(bogus, hi + 1, size)
+        else:
+            p.apply_batch(feed(lo, hi), i, lo, hi)
+
+    def destinations(p):
+        return list(p.pipes.values()) if routed else [p]
 
     # every case starts from a copy of the same post-batch-0 state
     template = tmp_path / "batch0"
-    pipeline(template).apply_batch(feed(0, size - 1), 0, 0, size - 1)
+    run_batch(pipeline(template), 0)
 
     real_replace = os.replace
     targets: list[str] = []
@@ -240,8 +287,9 @@ def test_crash_at_every_durable_write(
     clean = pipeline(tmp_path / "clean")
     with monkeypatch.context() as m:
         m.setattr(os, "replace", counting)
-        batch1(clean)
-    assert len(targets) == (7 if mode == "mor" else 5), targets
+        run_batch(clean, 1)
+    per_destination = 7 if mode == "mor" else 5
+    assert len(targets) == per_destination * (2 if routed else 1), targets
     assert {"version-hint.text", "latest.json", "batch-0000000001.json"} <= set(
         targets
     )
@@ -270,20 +318,36 @@ def test_crash_at_every_durable_write(
         with monkeypatch.context() as m:
             arm(m)
             with pytest.raises(_InjectedCrash):
-                batch1(crashed)
+                run_batch(crashed, 1)
 
         resumed = pipeline(root)
-        resumed.run(feed, SPEC.n_events, size)
-        assert _spark_rows(resumed.read_table()) == want, name
-        recs = CheckpointStore(str(root / "ckpt")).all()
-        assert [r["batch_id"] for r in recs] == list(range(len(recs))), name
-        assert recs[0]["offset_start"] == 0, name
-        assert recs[-1]["offset_end"] == SPEC.n_events - 1, name
-        for a, b in zip(recs, recs[1:]):
-            assert b["offset_start"] == a["offset_end"] + 1, name
-        meta_dir = root / "table" / "metadata"
-        for f in meta_dir.glob("v*.metadata.json"):
-            Snapshot.from_json(f.read_text())
+        if routed:
+            resumed.run_feed(bogus, SPEC.n_events, size + size // 2)
+        else:
+            resumed.run(feed, SPEC.n_events, size)
+        got = sorted(
+            row
+            for p in destinations(resumed)
+            for row in _spark_rows(p.read_table())
+        )
+        assert got == want, name
+        for p in destinations(resumed):
+            recs = CheckpointStore(p.checkpoints.path).all()
+            assert [r["batch_id"] for r in recs] == list(range(len(recs))), name
+            assert recs[0]["offset_start"] == 0, name
+            assert recs[-1]["offset_end"] == SPEC.n_events - 1, name
+            for a, b in zip(recs, recs[1:]):
+                assert b["offset_start"] == a["offset_end"] + 1, name
+            meta_dir = pathlib.Path(p.table.path) / "metadata"
+            for f in meta_dir.glob("v*.metadata.json"):
+                Snapshot.from_json(f.read_text())
+            report = p.table.fsck(check_rows=False)
+            assert report["ok"], (name, report)
+            if routed:
+                dead = spark.read.parquet(p.quarantine_path)
+                assert sorted(
+                    r["offset"] for r in dead.select("offset").collect()
+                ) == bad_offsets, name
         leftovers = [
             os.path.join(d, f)
             for d, _, files in os.walk(root)
@@ -291,8 +355,6 @@ def test_crash_at_every_durable_write(
             if f.endswith(".tmp")
         ]
         assert not leftovers, (name, leftovers)
-        report = resumed.table.fsck(check_rows=False)
-        assert report["ok"], (name, report)
 
 
 def test_lineage_manifests(spark, feed_df, tmp_path):

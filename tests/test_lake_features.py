@@ -306,6 +306,15 @@ def test_erase_where_removes_rows_and_tombstones(spark, tmp_path):
     # erasure is a normal snapshot: expiry then drops pre-erasure files
     t.expire_snapshots(keep_last=1)
     assert t.read().count() == 2
+    # a key_values erasure that matches no row observes 0
+    rec = t.erase_where(F.col("conv_id") == "zz", key_values=["zz"])
+    assert rec["rows_erased"] == 0
+    assert t.read().count() == 2
+    # an erasure that empties its buckets still observes its count
+    n_hidden = t.read(include_hidden=True).count()
+    rec = t.erase_where(F.lit(True))
+    assert rec["rows_erased"] == n_hidden == 2
+    assert t.read(include_hidden=True).count() == 0
 
 
 def test_erase_where_free_predicate_touches_all_buckets(spark, tmp_path):

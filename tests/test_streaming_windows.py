@@ -487,6 +487,14 @@ def test_streaming_cdc_topic_converges(spark, tmp_path):
     assert len(recs) >= 2, "expected multiple epochs"
     # the post-epoch hook fired once per applied epoch, in order
     assert hook_calls == [r["batch_id"] for r in recs]
+    # each file holds offsets from the whole topic, so epochs interleave:
+    # a later epoch starts below an earlier one's end. An offset-frontier
+    # fence would drop those events; streaming keeps the batch-id fence.
+    assert any(
+        later["offset_start"] < earlier["offset_end"]
+        for i, earlier in enumerate(recs)
+        for later in recs[i + 1:]
+    ), [(r["offset_start"], r["offset_end"]) for r in recs]
     got = sorted(
         (r["conv_id"], r["turn_idx"], r["text"])
         for r in sp.read_table().collect()
