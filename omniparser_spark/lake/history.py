@@ -20,18 +20,22 @@ sink" pattern, running beside the current-state table off one feed:
   commit-ordered, so this is the crash-only path; the identity test
   pins that an in-order replay equals the one-pass build.
 
-Scale shape per batch: one key window over the batch (O(batch)), one
-bucket-pruned read of the affected keys' CURRENT rows (the merge path
-already prunes to the batch's buckets; current rows are a key-unique
-slice), then the standard merge — O(batch + touched buckets), the
-same class as the state table's own apply.
+Scale shape per batch: one bounded key-footprint collect over the
+batch, then the standard merge, whose commit write runs the whole
+plan once — one bucket-pruned read of the affected keys' CURRENT rows
+(current rows are a key-unique slice), one join of the batch against
+them, one key window that emits both the new versions and the closing
+rows (O(batch)), and the touched-bucket rewrite: O(batch + touched
+buckets), the same class as the state table's own apply.
+``late_events`` is observed on that write, not counted by a job of
+its own.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from omniparser_spark.lake.merge import merge_into
@@ -92,16 +96,17 @@ class HistorySink:
             return None  # fenced (merge_into would also no-op)
 
         k = list(self.KEYS)
-        # bucket-prune BOTH current-row reads to the batch's key
+        # bucket-prune the current-row read to the batch's key
         # footprint (one key-only distinct, the same insurance pass
         # the merge runs): without this each history batch scans the
-        # whole table twice
+        # whole table
         from omniparser_spark.lake.table import bucket_footprint
 
         touched = bucket_footprint(
             changes, summary["key_col"], int(summary["n_buckets"])
         )
-        # current version per affected key, with its fence position
+        # current version per affected key, with its fence position and
+        # the columns its closing row keeps
         cur = (
             self.table.read(buckets=touched, include_hidden=True)
             .filter(F.col("is_current"))
@@ -111,88 +116,94 @@ class HistorySink:
                 F.col("version_number").alias("_cur_ver"),
                 F.col("ts").alias("_cur_ts"),
                 F.col("_last_offset").alias("_cur_off"),
+                *[
+                    F.col(c).alias(f"_cur_{c}")
+                    for c in ("role", "text", "tool", "is_deleted",
+                              "valid_from")
+                ],
             )
         )
-        # persist the batch-to-current join: late counting, version
-        # chaining, and interval closing all read it (without the
-        # cache each pass re-runs the join AND the pruned table read —
-        # review finding); O(batch) rows, dropped before returning
-        joined = changes.join(cur, k, "left").persist()
+        joined = changes.join(cur, k, "left")
         pos = F.struct(F.col("ts"), F.col("offset").cast("long"))
         cur_pos = F.struct(
             F.col("_cur_ts"), F.col("_cur_off").cast("long")
         )
         is_late = F.col("_cur_ver").isNotNull() & (pos <= cur_pos)
-        late_count = joined.filter(is_late).count()
-        fresh = joined.filter(~is_late)
+        # count late events on the frame the merge's commit write runs,
+        # before the late filter: no count job and no cache. Named apart
+        # from merge_into's own `merge_<batch_id>` Observation in the
+        # same plan.
+        late = Observation(f"history_late_{batch_id}")
+        observed = joined.observe(
+            late, F.count(F.when(is_late, 1)).alias("late_events")
+        )
 
+        # ONE windowed pass over the fresh changes emits every history
+        # row: each change's new version plus, for the first fresh
+        # change of a key with a stored current version, the row that
+        # closes that version — its timestamp and fence position are
+        # the change's, which lets the update win the row fence. One
+        # generator, not a union of two branches: the optimizer prunes
+        # union branches apart, and each branch would re-run the join
+        # and the current-row read.
         w = Window.partitionBy(*k).orderBy(F.col("ts"), F.col("offset"))
-        wk = Window.partitionBy(*k)
-        versions = fresh.select(
-            *k,
+        fresh = observed.filter(~is_late).select(
+            "*",
+            F.row_number().over(w).alias("_rn"),
+            F.lead("ts").over(w).alias("_next_ts"),
+            F.count(F.lit(1)).over(Window.partitionBy(*k)).alias("_n"),
+        )
+        new_version = F.struct(
             "role", "text", "tool", "ts", "offset",
             (F.col("op") == "D").alias("is_deleted"),
-            (
-                F.coalesce(F.col("_cur_ver"), F.lit(0))
-                + F.row_number().over(w)
-            ).cast("int").alias("version_number"),
+            (F.coalesce(F.col("_cur_ver"), F.lit(0)) + F.col("_rn"))
+            .cast("int").alias("version_number"),
             F.col("ts").alias("valid_from"),
-            F.lead("ts").over(w).alias("valid_to"),
-            (
-                F.row_number().over(w) == F.count(F.lit(1)).over(wk)
-            ).alias("is_current"),
+            F.col("_next_ts").alias("valid_to"),
+            (F.col("_rn") == F.col("_n")).alias("is_current"),
             F.lit("I").alias("op"),
         )
-        # close the previously-current version: first fresh change per
-        # key supplies the closing timestamp AND the fence position
-        # that lets the update win the row fence
-        first = fresh.withColumn(
-            "_rn", F.row_number().over(w)
-        ).filter(
-            (F.col("_rn") == 1) & F.col("_cur_ver").isNotNull()
-        ).select(
-            *k,
-            F.col("_cur_ver"),
-            F.col("ts").alias("_close_ts"),
-            F.col("offset").alias("_close_off"),
-        )
-        closing = (
-            self.table.read(buckets=touched, include_hidden=True)
-            .filter(F.col("is_current"))
-            .join(first, k, "inner")
-            .filter(F.col("version_number") == F.col("_cur_ver"))
-            .select(
-                *k,
-                "role", "text", "tool",
-                F.col("_close_ts").alias("ts"),
-                F.col("_close_off").alias("offset"),
-                "is_deleted",
-                "version_number",
-                "valid_from",
-                F.col("_close_ts").alias("valid_to"),
+        close_current = F.when(
+            (F.col("_rn") == 1) & F.col("_cur_ver").isNotNull(),
+            F.struct(
+                *[
+                    F.col(f"_cur_{c}").alias(c)
+                    for c in ("role", "text", "tool")
+                ],
+                "ts",
+                "offset",
+                F.col("_cur_is_deleted").alias("is_deleted"),
+                F.col("_cur_ver").alias("version_number"),
+                F.col("_cur_valid_from").alias("valid_from"),
+                F.col("ts").alias("valid_to"),
                 F.lit(False).alias("is_current"),
                 F.lit("U").alias("op"),
-            )
+            ),
         )
-        batch = versions.unionByName(closing)
+        batch = fresh.select(
+            *k,
+            F.inline(
+                F.filter(
+                    F.array(new_version, close_current),
+                    lambda r: r.isNotNull(),
+                )
+            ),
+        )
         # NOTE op is never 'D': history rows are all VISIBLE —
         # is_deleted is a data column, not the engine tombstone. An
         # all-late batch makes an EMPTY merge write; the fence still
         # advances, so the replayed slice stays exactly-once.
-        try:
-            stats = merge_into(
-                self.table,
-                batch,
-                batch_id=batch_id,
-                max_offset=max_offset,
-                mode=self.merge_mode,
-                # the batch's keys are a subset of `changes`' keys, so
-                # the touched set above covers the merge — skips a
-                # second full key-distinct pass inside merge_into
-                touched_buckets=touched,
-            )
-        finally:
-            joined.unpersist()
+        stats = merge_into(
+            self.table,
+            batch,
+            batch_id=batch_id,
+            max_offset=max_offset,
+            mode=self.merge_mode,
+            # the batch's keys are a subset of `changes`' keys, so the
+            # touched set above covers the merge — skips a second full
+            # key-distinct pass inside merge_into
+            touched_buckets=touched,
+        )
         if stats is not None:
-            stats["late_events"] = int(late_count)
+            stats["late_events"] = int(late.get["late_events"])
         return stats

@@ -1,9 +1,8 @@
 """Idempotent MERGE INTO with monotonic offset fencing.
 
-Semantics (the north rule's apply contract), expressed once as SQL —
-the statement the engine runs verbatim when an Iceberg catalog is
-configured — and implemented over :class:`LakeTable` as the
-sandbox-local equivalent:
+Semantics (the north rule's apply contract), stated once as the
+equivalent Iceberg/Delta MERGE statement and implemented over
+:class:`LakeTable`:
 
     MERGE INTO target t
     USING batch s                       -- already LWW-deduped per key
@@ -77,32 +76,6 @@ def derive_n_buckets(
         return min_buckets
     b = -(-expected_table_rows // max(target_bucket_rows, 1))  # ceil
     return max(min_buckets, min(max_buckets, int(b)))
-
-
-def iceberg_merge_sql(
-    target: str,
-    source_view: str,
-    keys: Sequence[str] = DEFAULT_KEYS,
-    update_cols: Sequence[str] = ("role", "text", "tool", "ts"),
-) -> str:
-    """The production MERGE statement for a real Iceberg catalog."""
-    on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    fence = "(struct(s.ts, s.offset) > struct(t.ts, t._last_offset))"
-    sets = ", ".join(f"t.{c} = s.{c}" for c in update_cols)
-    sets += ", t._last_offset = s.offset, t._deleted = (s.op = 'D')"
-    ins_cols = ", ".join([*keys, *update_cols, "_last_offset", "_deleted"])
-    ins_vals = ", ".join(
-        [f"s.{k}" for k in keys]
-        + [f"s.{c}" for c in update_cols]
-        + ["s.offset", "(s.op = 'D')"]
-    )
-    return f"""
-MERGE INTO {target} t
-USING {source_view} s
-ON {on}
-WHEN MATCHED AND {fence} THEN UPDATE SET {sets}
-WHEN NOT MATCHED THEN INSERT ({ins_cols}) VALUES ({ins_vals})
-""".strip()
 
 
 def _observe_written(

@@ -50,10 +50,12 @@ def normalize_flagged(raw: DataFrame) -> DataFrame:
     """raw envelope feed -> one canonical row per event with `_ok` /
     `_error` flags still attached (good and quarantine not yet split).
 
-    The apply loop persists THIS frame so the vectorized decode runs
-    exactly once per micro-batch; good rows, quarantine rows, and the
-    lineage/metrics aggregate are all cheap filters over the cache.
-    `raw` needs columns offset/op/format/payload/ts/source_part.
+    The apply path does not cache it: good rows, quarantine rows and
+    the lineage/metrics Observation are filters over this one decode
+    tree, evaluated inside the merge's commit write (plus the
+    dead-letter write when quarantine capture is on). Only `drive`
+    persists it, and only when several pipelines share one prebuilt
+    slice. `raw` needs columns offset/op/format/payload/ts/source_part.
     """
     decoded = decode_payload(raw)
 

@@ -762,6 +762,8 @@ def test_incremental_rollup_view_matches_full_recompute(spark, tmp_path):
 
     rec = sync_rollup_view(t, view, group_col="conv_id", metrics=metrics)
     assert not rec["fenced"] and rec["to_version"] == t.current().version
+    # a's row is updated, b's is deleted (its count reaches zero)
+    assert rec["groups_touched"] == 2
 
     got = {r.conv_id: (r.n_rows, r.chars) for r in view.read().collect()}
     full = {
@@ -1548,7 +1550,9 @@ def test_view_sync_over_changelog_neutral_commits_returns(
     groups and must RETURN (no empty-write Observation hang) while
     still advancing the view frontier."""
     from omniparser_spark.lake.views import (
+        create_hll_view,
         create_rollup_view,
+        sync_hll_view,
         sync_rollup_view,
     )
 
@@ -1556,6 +1560,7 @@ def test_view_sync_over_changelog_neutral_commits_returns(
     view = create_rollup_view(
         spark, str(tmp_path / "v"), t, group_col="conv_id"
     )
+    hll = create_hll_view(spark, str(tmp_path / "hll"), t)
     # bootstrap + split each bucket into extra files, then compact:
     # a version advance with zero changelog rows
     t.compact_buckets(min_files=1, buckets=None)  # may no-op
@@ -1591,6 +1596,13 @@ def test_view_sync_over_changelog_neutral_commits_returns(
         for r in view.read().select("conv_id", "n_rows").collect()
     )
     assert got == want
+    # the HLL view's sync over the same window: an empty register fold
+    # (no post-images, no touched view buckets) also returns
+    hrec = sync_hll_view(t, hll)
+    assert hrec["fenced"] is False
+    assert hrec["groups_touched"] == 0
+    assert hrec["to_version"] == t.current().version
+    assert int(hll.summary()["max_offset_applied"]) == t.current().version
 
 
 def test_hll_view_incremental_distinct_ever(spark, tmp_path):
@@ -1668,6 +1680,88 @@ def test_hll_view_incremental_distinct_ever(spark, tmp_path):
         r["conv_id"]: (r["approx_distinct"], r["hll_zero_registers"])
         for r in read_hll_view(view).collect()
     } == want
+
+
+def test_derived_table_jobs_per_sync(spark, tmp_path):
+    """The derived-table maintainers run only their real work: one
+    bounded footprint collect plus the merge's commit write (which, for
+    the views, may broadcast the touched view rows). `groups_touched`
+    and `late_events` are observed on that write — a cache or a count
+    job per sync would show here as extra jobs (query stages of a
+    cached AQE plan each run as their own job). Jobs are counted by
+    job group on a merge-on-read source."""
+    from omniparser_spark.lake.history import HistorySink
+    from omniparser_spark.lake.views import (
+        create_hll_view,
+        create_rollup_view,
+        sync_hll_view,
+        sync_rollup_view,
+    )
+
+    sc = spark.sparkContext
+    n_convs = 100
+
+    def feed(lo, n):
+        # offsets lo..lo+n-1 over n_convs x 3 turns, every 17th a delete
+        return spark.range(lo, lo + n).select(
+            F.concat(
+                F.lit("c"), (F.col("id") % n_convs).cast("string")
+            ).alias("conv_id"),
+            (F.col("id") % 3).cast("int").alias("turn_idx"),
+            F.lit("user").alias("role"),
+            F.concat(F.lit("t"), F.col("id").cast("string")).alias("text"),
+            F.lit(None).cast("string").alias("tool"),
+            F.timestamp_seconds(F.col("id") + 1_700_000_000).alias("ts"),
+            F.col("id").alias("offset"),
+            F.when(F.col("id") % 17 == 0, "D").otherwise("U").alias("op"),
+        )
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "src"), SCHEMA, key_col="conv_id",
+        n_buckets=4, merge_keys=("conv_id", "turn_idx"),
+    )
+    merge_into(t, feed(0, 300), batch_id=0, max_offset=299, mode="mor")
+    metrics = {"chars": lambda g: F.length(g("text"))}
+    rollup = create_rollup_view(
+        spark, str(tmp_path / "rollup"), t, metrics=metrics
+    )
+    hll = create_hll_view(spark, str(tmp_path / "hll"), t)
+    merge_into(t, feed(300, 150), batch_id=1, max_offset=449, mode="mor")
+
+    rec, n = jobs(
+        "rollup_sync", lambda: sync_rollup_view(t, rollup, metrics=metrics)
+    )
+    assert n <= 3, f"rollup sync ran {n} jobs"
+    # 150 events over all 100 conversations; the observed count is the
+    # number of view rows the merge wrote
+    assert rec["groups_touched"] == n_convs
+    rec, n = jobs("hll_sync", lambda: sync_hll_view(t, hll))
+    assert n <= 3, f"HLL sync ran {n} jobs"
+    # registers are grow-only: a conversation whose only window events
+    # are deletes has nothing to fold and is not touched
+    live = feed(300, 150).filter(F.col("op") != "D")
+    assert rec["groups_touched"] == live.select("conv_id").distinct().count()
+
+    sink = HistorySink(spark, str(tmp_path / "history"), n_buckets=4)
+    sink.apply_batch(feed(0, 300), batch_id=0, max_offset=299)
+    rec, n = jobs(
+        "history_batch",
+        lambda: sink.apply_batch(feed(300, 150), batch_id=1, max_offset=449),
+    )
+    # footprint collect, broadcasts of the batch keys and of the current
+    # rows, commit write: the batch-to-current join runs once
+    assert n <= 4, f"HistorySink.apply_batch ran {n} jobs"
+    assert rec["late_events"] == 0
 
 
 def test_diff_tables_shadow_gate(spark, tmp_path):

@@ -79,8 +79,14 @@ def test_streaming_soak_maintenance_bounded(spark, tmp_path):
     epoch_wall: list[float] = []
     state = {"n": 0, "t": time.time()}
 
+    syncs: list[dict] = []
+
     def after_epoch(rec) -> None:
-        sync_rollup_view(pipe.table, view, group_col="conv_id", metrics=metrics)
+        syncs.append(
+            sync_rollup_view(
+                pipe.table, view, group_col="conv_id", metrics=metrics
+            )
+        )
         state["n"] += 1
         # the view is itself a lake table taking one commit per sync —
         # it needs the same snapshot-expiry maintenance as the source
@@ -101,6 +107,12 @@ def test_streaming_soak_maintenance_bounded(spark, tmp_path):
         assert isinstance(r["rows_written"], int) and r["rows_written"] > 0
         assert isinstance(r["tombstones"], int)
         assert sum(d["rows"] for d in r["lineage"]) == r["events_in"]
+
+    # every epoch changed some conversations, and the sync inside
+    # foreachBatch observed how many on its merge write
+    assert len(syncs) == n_epochs
+    for s in syncs:
+        assert isinstance(s["groups_touched"], int) and s["groups_touched"] > 0
 
     # ---- state correctness after all that maintenance ----
     ref = CdcPipeline(
