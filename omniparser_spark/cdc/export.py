@@ -47,7 +47,7 @@ import json
 import os
 from typing import Any, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -234,34 +234,30 @@ def export_changelog(
     table: LakeTable,
     out_dir: str,
     encoder=encode_changes_proto,
-    upto_offset: int | None = None,
 ) -> dict[str, Any]:
-    """Export the table's changelog since the sink's frontier as one
-    fenced batch of framed messages.  Returns the batch record
-    (`fenced: True` if there was nothing new to export).
-
-    `upto_offset` bounds the batch's upper offset (defaults to the
-    table's applied frontier, `max_offset_applied`) — pass it to chunk
-    a large catch-up into several batches.
+    """Export the table's changelog since the sink's frontier, up to
+    the table's applied frontier (`max_offset_applied`), as one fenced
+    batch of framed messages.  Returns the batch record (`fenced: True`
+    if there was nothing new to export); its `n_records` is observed
+    on the frames write itself, not counted by a second job.
     """
     os.makedirs(out_dir, exist_ok=True)
     manifest = read_export_manifest(out_dir)
     from_offset = int(manifest["frontier"]) + 1
-    head = int(table.summary().get("max_offset_applied", -1))
-    to_offset = head if upto_offset is None else min(int(upto_offset), head)
+    to_offset = int(table.summary().get("max_offset_applied", -1))
     # Reclaim orphans from crashed exports: if the table frontier
     # advanced between a crash and this retry, the retry writes
     # batch-<from>-<newTo> and the old batch-<from>-<oldTo> dir would
     # never be overwritten, manifest-listed, or cleaned (an unbounded
     # disk leak in a crash loop).  Only dirs STRICTLY behind the
     # manifest frontier are reclaimed: an unowned dir starting at
-    # frontier+1 may be another writer's (or a chunked retry's)
-    # in-flight batch — rmtree'ing it mid-write was a race the
-    # single-writer assumption merely documented (ADVICE r6).  Dirs
-    # behind the frontier are definitionally dead: the manifest owns
-    # every committed range up to the frontier and consumers read only
-    # owned dirs.  Runs before the fence so even caught-up callers
-    # (the steady state of a polling exporter) collect stale dirs.
+    # frontier+1 may be another writer's in-flight batch — rmtree'ing
+    # it mid-write was a race the single-writer assumption merely
+    # documented (ADVICE r6).  Dirs behind the frontier are
+    # definitionally dead: the manifest owns every committed range up
+    # to the frontier and consumers read only owned dirs.  Runs before
+    # the fence so even caught-up callers (the steady state of a
+    # polling exporter) collect stale dirs.
     import shutil
 
     owned = {b["dir"] for b in manifest["batches"]}
@@ -285,11 +281,12 @@ def export_changelog(
         }
 
     changes = table.read_changes(from_offset, to_offset)
-    frames = encoder(changes)
+    obs = Observation("export_changelog")
+    frames = encoder(changes).observe(obs, F.count(F.lit(1)).alias("n"))
     batch_rel = f"batch-{from_offset}-{to_offset}"
     batch_dir = os.path.join(out_dir, batch_rel)
     frames.write.mode("overwrite").parquet(batch_dir)
-    n = table.spark.read.parquet(batch_dir).count()
+    n = int(obs.get["n"])
 
     record = {
         "fenced": False,

@@ -39,7 +39,7 @@ from pyspark.sql import types as T
 from omniparser_spark.cdc.checkpoints import CheckpointStore
 from omniparser_spark.cdc.metrics import MetricsLog
 from omniparser_spark.lake.merge import merge_into
-from omniparser_spark.lake.table import LakeTable, fixed_shape_job
+from omniparser_spark.lake.table import LakeTable
 from omniparser_spark.operators.normalize import normalize_flagged, split_flagged
 
 TRANSCRIPTS_SCHEMA = T.StructType(
@@ -322,8 +322,6 @@ class CdcPipeline:
         feed_for_range: Callable[[int, int], DataFrame],
         total_events: int,
         batch_size: int,
-        evolve_at_offset: int | None = None,
-        evolved_columns: T.StructType | None = None,
     ) -> list[dict[str, Any]]:
         """Drive micro-batches from the current checkpoint to `total_events`.
 
@@ -334,7 +332,7 @@ class CdcPipeline:
         """
         return drive(
             [self], lambda s, e: (feed_for_range(s, e), None),
-            total_events, batch_size, evolve_at_offset, evolved_columns,
+            total_events, batch_size,
         )[0]
 
     def run_feed(
@@ -342,8 +340,6 @@ class CdcPipeline:
         feed: DataFrame,
         total_events: int,
         batch_size: int,
-        evolve_at_offset: int | None = None,
-        evolved_columns: T.StructType | None = None,
     ) -> list[dict[str, Any]]:
         """`run` over a materialized feed DataFrame (parquet scan of the
         envelope columns), with the decode/normalize expression tree
@@ -356,7 +352,7 @@ class CdcPipeline:
         tests/test_plans.py)."""
         return drive(
             [self], feed_slices(feed, normalize_flagged(feed)),
-            total_events, batch_size, evolve_at_offset, evolved_columns,
+            total_events, batch_size,
         )[0]
 
     def replay_quarantine(self) -> dict[str, Any] | None:
@@ -571,8 +567,6 @@ def drive(
     make_slices: Callable[[int, int], tuple[DataFrame, DataFrame | None]],
     total_events: int,
     batch_size: int,
-    evolve_at_offset: int | None = None,
-    evolved_columns: T.StructType | None = None,
 ) -> list[list[dict[str, Any]]]:
     """The one exactly-once grid driver: apply the feed up to
     `total_events` to every pipeline in `pipes`, one batch grid for all
@@ -603,62 +597,48 @@ def drive(
     def laggard() -> int:
         return min(p.checkpoints.next_offset() for p in pipes)
 
-    # AQE off for the apply loop: every shuffle otherwise becomes a
-    # separately-materialized query stage with a driver replan
-    # (~0.5s serial per batch). The loop's shapes are fully known
-    # (partition counts sized in session.py; skewed keys collapse
-    # in the merge's map-side partial agg), so AQE only adds
-    # latency here. Restored afterwards for ad-hoc queries.
-    with fixed_shape_job(pipes[0].spark):
-        start = laggard()
-        stalls = 0
-        while start < total_events:
-            end = min(start + batch_size - 1, total_events - 1)
-            if (
-                evolve_at_offset is not None
-                and evolved_columns is not None
-                and end >= evolve_at_offset
-            ):
-                for pipe in pipes:
-                    pipe.table.evolve_schema_additive(evolved_columns)
-            raw, canon = make_slices(start, end)
-            # decode once: the first pipeline's action materializes the
-            # cached slice, the rest read it
-            shared = canon is not None and len(pipes) > 1
+    start = laggard()
+    stalls = 0
+    while start < total_events:
+        end = min(start + batch_size - 1, total_events - 1)
+        raw, canon = make_slices(start, end)
+        # decode once: the first pipeline's action materializes the
+        # cached slice, the rest read it
+        shared = canon is not None and len(pipes) > 1
+        if shared:
+            canon = canon.persist()
+        try:
+            for pipe, out in zip(pipes, results):
+                frontier = pipe.checkpoints.next_offset()
+                if end < frontier:
+                    out.append(pipe._fenced_record(None, start, end))
+                    continue
+                b_raw, b_canon = raw, canon
+                if frontier > start:
+                    suffix = F.col("offset") >= frontier
+                    b_raw = raw.filter(suffix)
+                    if canon is not None:
+                        b_canon = canon.filter(suffix)
+                out.append(pipe.apply_batch(
+                    b_raw, pipe.checkpoints.next_batch_id(),
+                    max(start, frontier), end, _canon=b_canon,
+                ))
+        finally:
             if shared:
-                canon = canon.persist()
-            try:
-                for pipe, out in zip(pipes, results):
-                    frontier = pipe.checkpoints.next_offset()
-                    if end < frontier:
-                        out.append(pipe._fenced_record(None, start, end))
-                        continue
-                    b_raw, b_canon = raw, canon
-                    if frontier > start:
-                        suffix = F.col("offset") >= frontier
-                        b_raw = raw.filter(suffix)
-                        if canon is not None:
-                            b_canon = canon.filter(suffix)
-                    out.append(pipe.apply_batch(
-                        b_raw, pipe.checkpoints.next_batch_id(),
-                        max(start, frontier), end, _canon=b_canon,
-                    ))
-            finally:
-                if shared:
-                    canon.unpersist()
-            # a repair round may hold the laggard at `start` once per
-            # pipeline (its commit bumps next_batch_id past the table's,
-            # so the following round applies); more rounds than
-            # pipelines without progress is a real wedge
-            nxt = laggard()
-            if nxt <= start:
-                stalls += 1
-                if stalls > len(pipes):
-                    raise RuntimeError(
-                        f"apply loop stalled at offset {start}: "
-                        "no checkpoint frontier is advancing"
-                    )
-            else:
-                stalls = 0
-            start = max(start, nxt)
+                canon.unpersist()
+        # a repair round may hold the laggard at `start` once per
+        # pipeline (its commit bumps next_batch_id past the table's,
+        # so the following round applies); more rounds than
+        # pipelines without progress is a real wedge
+        nxt = laggard()
+        if nxt <= start:
+            stalls += 1
+            if stalls > len(pipes):
+                raise RuntimeError(
+                    f"apply loop stalled at offset {start}: "
+                    "no checkpoint frontier is advancing"
+                )
+        else:
+            stalls = 0
+        start = max(start, nxt)
     return results

@@ -305,12 +305,6 @@ def merge_into(
     target = table.read(
         buckets=touched, include_hidden=True, version=base_snap.version
     )
-    if "_last_offset" not in target.columns:
-        target = target.withColumn("_last_offset", F.lit(-1).cast("long"))
-
-    if "_deleted" not in target.columns:
-        target = target.withColumn("_deleted", F.lit(False))
-
     # MERGE as union + max_by aggregate: the fence "source wins iff
     # (s.ts, s.offset) > (t.ts, t._last_offset)" is exactly the LWW
     # winner under the total order (ts, _last_offset) with the target

@@ -41,7 +41,7 @@ import os
 import re
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -184,14 +184,15 @@ def bucket_footprint(df: DataFrame, key_col: str, n_buckets: int) -> list[int]:
 def fixed_shape_job(spark):
     """Turn AQE off for the enclosed block: every action planned inside
     it runs its WHOLE plan non-adaptively — not only the fixed-shape
-    stage that motivates it. Used around commit writes and bucket-prune
-    collects, whose output partitioning is PINNED by exact bucket
-    placement (one shuffle partition per touched bucket — a count AQE
-    must not coalesce, and bucket dirs AQE skew-split must not break),
-    so adaptive re-planning only adds its per-query-stage latency
-    (measured ~0.25-0.3 s per action at local[32]); the grid driver
-    wraps a whole batch sequence the same way. A no-op when AQE is
-    already off, so scopes nest.
+    stage that motivates it. Scoped to exactly two actions, both in
+    this module: the commit write (:meth:`LakeTable._write_bucket_files`)
+    and the bucket-prune collect (:func:`bucket_footprint`), whose
+    output partitioning is PINNED by exact bucket placement (one
+    shuffle partition per touched bucket — a count AQE must not
+    coalesce, and bucket dirs AQE skew-split must not break), so
+    adaptive re-planning only adds its per-query-stage latency
+    (measured ~0.25-0.3 s per action at local[32]). A no-op when AQE
+    is already off, so scopes nest.
 
     The flag is SESSION-GLOBAL conf: this assumes one driver thread
     uses the session while the block runs. A query on another thread
@@ -669,7 +670,6 @@ class LakeTable:
         head: Snapshot,
         touched: set[str],
         summary_updates: dict[str, Any],
-        schema_changed: bool,
     ) -> None:
         """Iceberg-style conflict validation: the head moved while this
         commit was in flight — rebasing (re-pointing the already-written
@@ -685,7 +685,7 @@ class LakeTable:
                 f"cannot be rebased: {why}; re-read and retry"
             )
 
-        if schema_changed or head.schema_json != base.schema_json:
+        if head.schema_json != base.schema_json:
             raise conflict("schema changed in one of the commits")
         for k in ("n_buckets", "key_col", "sort_order"):
             if head.summary.get(k) != base.summary.get(k):
@@ -715,17 +715,32 @@ class LakeTable:
         base: Snapshot,
         touched_buckets,
         summary_updates: dict[str, Any],
-        schema_changed: bool,
-        stage: bool,
+        stage: bool = False,
         max_rebases: int = 3,
     ) -> Snapshot:
-        """Assemble the snapshot against `base` and swap the pointer;
-        on a moved head, validate disjointness and rebase (re-assemble
-        against the new head — the data files are already on disk and
-        carry over untouched) up to `max_rebases` times. `assemble` is
-        a pure function Snapshot -> Snapshot."""
-        snap = assemble(base)
-        self._check_pending_stage(snap)
+        """The one way a new snapshot is committed. `assemble` is a pure
+        function Snapshot -> {field: value} naming only the fields that
+        change (a changed dict is a fresh copy); the next snapshot is
+        `base` with those fields replaced, one version up. Refuses to
+        clobber a pending stage (:meth:`_check_pending_stage`); with
+        `stage` writes the metadata file but leaves the pointer. On a
+        moved head, validates disjointness against `touched_buckets`
+        and `summary_updates` and rebases (re-assembles against the new
+        head — the data files are already on disk and carry over
+        untouched) up to `max_rebases` times; `touched_buckets=None`
+        (a whole-table or metadata-only change) never rebases."""
+
+        def build(base: Snapshot) -> Snapshot:
+            snap = replace(
+                base,
+                version=base.version + 1,
+                parent_version=base.version,
+                **assemble(base),
+            )
+            self._check_pending_stage(snap)
+            return snap
+
+        snap = build(base)
         if stage:
             self._write_metadata_file(snap)  # pointer untouched
             return snap
@@ -744,14 +759,12 @@ class LakeTable:
                 head = self.current()
                 if head.version == snap.parent_version or touched is None:
                     # not a moved-head conflict (lock timeout / pending
-                    # stage), or a full rewrite — nothing to rebase onto
+                    # stage), or a whole-table change — nothing to
+                    # rebase onto
                     raise
-                self._validate_rebase(
-                    base, head, touched, summary_updates, schema_changed
-                )
+                self._validate_rebase(base, head, touched, summary_updates)
                 base = head
-                snap = assemble(base)
-                self._check_pending_stage(snap)
+                snap = build(base)
         self._write_snapshot(snap, expected_parent=snap.parent_version)
         return snap
 
@@ -916,13 +929,14 @@ class LakeTable:
     def _resolve_lww(self, df: DataFrame, snap: Snapshot) -> DataFrame:
         """Collapse base + delta rows to the per-key LWW winner — the
         read-time half of merge-on-read. The order is the SAME total
-        order the COW merge fences on: (order_cols..., _last_offset),
-        with order_cols from the snapshot summary (default ["ts"],
-        recorded by the first delta commit). Exact ties can only be the
-        same event stored twice (a re-delivered batch both compacted
-        into the base and still pending as a delta), so their payloads
-        are identical and the winner choice is immaterial. One
-        hash-shuffle with map-side combine over the dirty rows only."""
+        order every writer fences on: (ts, _last_offset), the order the
+        COW merge and the MOR batch dedupe in ``merge_into`` use. `df`
+        is read under the snapshot schema, which carries the hidden
+        columns since :meth:`create`. Exact ties can only be the same
+        event stored twice (a re-delivered batch both compacted into
+        the base and still pending as a delta), so their payloads are
+        identical and the winner choice is immaterial. One hash-shuffle
+        with map-side combine over the dirty rows only."""
         keys = [
             k
             for k in (
@@ -931,22 +945,9 @@ class LakeTable:
             )
             if k in df.columns
         ]
-        order_cols = [
-            c
-            for c in snap.summary.get("delta_order_cols", ["ts"])
-            if c in df.columns
-        ]
-        for hidden, default in (
-            ("_last_offset", F.lit(-1).cast("long")),
-            ("_deleted", F.lit(False)),
-        ):
-            if hidden not in df.columns:
-                df = df.withColumn(hidden, default)
         others = [c for c in df.columns if c not in keys]
         payload = F.struct(*others)
-        order = F.struct(
-            *[F.col(c) for c in order_cols], F.col("_last_offset")
-        )
+        order = F.struct(F.col("ts"), F.col("_last_offset"))
         return (
             df.groupBy(*keys)
             .agg(F.max_by(payload, order).alias("_w"))
@@ -985,7 +986,6 @@ class LakeTable:
         df: DataFrame,
         touched_buckets: list[int] | None,
         summary_updates: dict[str, Any],
-        new_schema: T.StructType | None = None,
         stage: bool = False,
         bucket_stats_updates: dict[int, int] | None = None,
         base: "Snapshot | None" = None,
@@ -998,7 +998,12 @@ class LakeTable:
         (file-level pruning for later merges). ``_bucket`` itself is a
         derived partition transform, recomputed from the key on read
         when needed — it is not stored in the row data (same as Iceberg
-        hidden partitioning).
+        hidden partitioning). The schema is the base snapshot's: schema
+        changes are metadata-only commits (:meth:`evolve_schema_additive`,
+        :meth:`evolve_schema_widen`).
+
+        The snapshot is committed through :meth:`_finalize_commit`: the
+        base with its bucket dirs, deltas, stats and summary replaced.
 
         `stage=True` (write-audit-publish): the snapshot's data and
         metadata are fully written but the main pointer does NOT move —
@@ -1061,13 +1066,7 @@ class LakeTable:
                     if b not in cleared and lst
                 }
 
-            schema_json = (
-                json.loads(new_schema.json())
-                if new_schema is not None
-                else base.schema_json
-            )
-            summary = dict(base.summary)
-            summary.update(summary_updates)
+            summary = {**base.summary, **summary_updates}
 
             # Per-bucket max-_last_offset stats. Invariants:
             # - an UNTOUCHED bucket keeps its dir by reference, so its
@@ -1099,19 +1098,15 @@ class LakeTable:
                     if str(bk) in bucket_dirs:
                         bucket_stats[str(bk)] = int(v)
 
-            return Snapshot(
-                version=base.version + 1,
-                schema_json=schema_json,
-                bucket_dirs=bucket_dirs,
-                summary=summary,
-                parent_version=base.version,
-                bucket_stats=bucket_stats,
-                delta_dirs=delta_dirs,
-            )
+            return {
+                "bucket_dirs": bucket_dirs,
+                "summary": summary,
+                "bucket_stats": bucket_stats,
+                "delta_dirs": delta_dirs,
+            }
 
         return self._finalize_commit(
-            assemble, prev, touched_buckets, summary_updates,
-            schema_changed=new_schema is not None, stage=stage,
+            assemble, prev, touched_buckets, summary_updates, stage=stage
         )
 
     def commit_delta(
@@ -1120,7 +1115,6 @@ class LakeTable:
         summary_updates: dict[str, Any],
         stage: bool = False,
         stats_upper_bound: int | None = None,
-        order_cols: tuple[str, ...] = ("ts",),
         base: "Snapshot | None" = None,
     ) -> Snapshot:
         """Merge-on-read commit (Iceberg v2 MOR parity): append `df`'s
@@ -1150,8 +1144,10 @@ class LakeTable:
         `stats_upper_bound`: the batch's max offset, recorded as the
         per-bucket max-_last_offset stat for every bucket this delta
         touches (changelog pruning keeps working under MOR).
-        `order_cols` is recorded in the summary on first use so readers
-        resolve under the same total order the writer fenced on.
+
+        The snapshot is committed through :meth:`_finalize_commit`: the
+        base with its deltas, stats and summary replaced (base bucket
+        dirs and schema carried by reference).
 
         WAP (`stage=True`) composes exactly as with :meth:`commit`.
 
@@ -1168,18 +1164,6 @@ class LakeTable:
             for b, d in new_dirs.items():
                 delta_dirs.setdefault(b, []).append(d)
 
-            summary = dict(base.summary)
-            summary.update(summary_updates)
-            recorded = summary.get("delta_order_cols")
-            if recorded is None:
-                summary["delta_order_cols"] = list(order_cols)
-            elif list(order_cols) != list(recorded):
-                raise ValueError(
-                    f"delta order {list(order_cols)} conflicts with the "
-                    f"table's recorded order {recorded}; all MOR commits "
-                    "must fence on one total order"
-                )
-
             # base files are untouched: every stat carries verbatim,
             # then the batch's bound raises the touched buckets'
             # (upper-bound semantics — max keeps it valid even for
@@ -1192,23 +1176,18 @@ class LakeTable:
                         int(stats_upper_bound),
                     )
 
-            return Snapshot(
-                version=base.version + 1,
-                schema_json=base.schema_json,
-                bucket_dirs=dict(base.bucket_dirs),
-                summary=summary,
-                parent_version=base.version,
-                bucket_stats=bucket_stats,
-                delta_dirs=delta_dirs,
-            )
+            return {
+                "summary": {**base.summary, **summary_updates},
+                "bucket_stats": bucket_stats,
+                "delta_dirs": delta_dirs,
+            }
 
         # rebase contract (same as commit()): the appended delta dirs
         # are this commit's touched buckets — a concurrent maintenance
         # commit on DISJOINT buckets rebases cleanly; one that rewrote
         # or re-folded our buckets conflicts
         return self._finalize_commit(
-            assemble, prev, sorted(new_dirs), summary_updates,
-            schema_changed=False, stage=stage,
+            assemble, prev, sorted(new_dirs), summary_updates, stage=stage
         )
 
     def rollback(self, version: int) -> Snapshot:
@@ -1224,26 +1203,25 @@ class LakeTable:
         The summary carry includes the batch/offset FENCES as they
         were at `version`: after rolling back a bad batch, re-driving
         the feed from that frontier re-applies it exactly-once.
-        Refuses to roll back while a WAP stage is pending (same
-        pending-stage wedge rule as commit)."""
-        prev = self.current()
+        A whole-table change through :meth:`_finalize_commit`: refuses
+        while a WAP stage is pending (same pending-stage wedge rule as
+        commit) and when the head moved underneath it."""
         src = self.snapshot_at(version)
-        snap = Snapshot(
-            version=prev.version + 1,
-            schema_json=src.schema_json,
-            bucket_dirs=dict(src.bucket_dirs),
-            summary={
-                **src.summary,
-                "rolled_back_from": prev.version,
-                "rolled_back_to": version,
-            },
-            parent_version=prev.version,
-            bucket_stats=dict(src.bucket_stats),
-            delta_dirs={b: list(x) for b, x in src.delta_dirs.items()},
-        )
-        self._check_pending_stage(snap)
-        self._write_snapshot(snap, expected_parent=prev.version)
-        return snap
+
+        def assemble(base: Snapshot) -> dict[str, Any]:
+            return {
+                "schema_json": src.schema_json,
+                "bucket_dirs": src.bucket_dirs,
+                "summary": {
+                    **src.summary,
+                    "rolled_back_from": base.version,
+                    "rolled_back_to": version,
+                },
+                "bucket_stats": src.bucket_stats,
+                "delta_dirs": src.delta_dirs,
+            }
+
+        return self._finalize_commit(assemble, self.current(), None, {})
 
     def expire_snapshots(
         self, keep_last: int = 2, stage_grace_seconds: float = 24 * 3600.0
@@ -1638,10 +1616,6 @@ class LakeTable:
         target = self.read(
             buckets=buckets, include_hidden=True, version=pre.version
         )
-        for hidden, default in (("_last_offset", F.lit(-1).cast("long")),
-                                ("_deleted", F.lit(False))):
-            if hidden not in target.columns:
-                target = target.withColumn(hidden, default)
         # the erased count rides the commit write; the filter above the
         # observed node keeps it firing when the erasure empties its
         # buckets (observed 0 on empty writes, like merge_into)
@@ -1763,10 +1737,6 @@ class LakeTable:
         target = self.read(
             buckets=eligible, include_hidden=True, version=snap.version
         )
-        for hidden, default in (("_last_offset", F.lit(-1).cast("long")),
-                                ("_deleted", F.lit(False))):
-            if hidden not in target.columns:
-                target = target.withColumn(hidden, default)
         # one partition per bucket -> exactly one output file per
         # bucket directory, with exact 1:1 placement (no hash-collision
         # stragglers in the rewrite stage)
@@ -1929,20 +1899,12 @@ class LakeTable:
         merged = T.StructType(schema.fields + [
             T.StructField(f.name, f.dataType, True) for f in added
         ])
-        snap = Snapshot(
-            version=prev.version + 1,
-            schema_json=json.loads(merged.json()),
-            bucket_dirs=prev.bucket_dirs,
-            summary=dict(prev.summary),
-            parent_version=prev.version,
-            # metadata-only commit: data files are untouched, so the
-            # per-bucket max-offset stats carry over verbatim (dropping
-            # them silently disables changelog bucket pruning for every
-            # table that ever evolves its schema)
-            bucket_stats=dict(prev.bucket_stats),
-            delta_dirs={b: list(x) for b, x in prev.delta_dirs.items()},
+        # metadata-only: only the schema is replaced, so data dirs,
+        # deltas and per-bucket stats carry over verbatim
+        self._finalize_commit(
+            lambda base: {"schema_json": json.loads(merged.json())},
+            prev, None, {},
         )
-        self._write_snapshot(snap, expected_parent=prev.version)
 
     # safe widenings: parquet files written at the narrow type read
     # correctly under the wide read schema (verified against Spark 4's
@@ -1986,17 +1948,9 @@ class LakeTable:
         if not changed:
             return
         merged = T.StructType([by_name[f.name] for f in schema.fields])
-        snap = Snapshot(
-            version=prev.version + 1,
-            schema_json=json.loads(merged.json()),
-            bucket_dirs=prev.bucket_dirs,
-            summary=dict(prev.summary),
-            parent_version=prev.version,
-            # metadata-only commit: data files are untouched, so the
-            # per-bucket max-offset stats carry over verbatim (dropping
-            # them silently disables changelog bucket pruning for every
-            # table that ever evolves its schema)
-            bucket_stats=dict(prev.bucket_stats),
-            delta_dirs={b: list(x) for b, x in prev.delta_dirs.items()},
+        # metadata-only: only the schema is replaced, so data dirs,
+        # deltas and per-bucket stats carry over verbatim
+        self._finalize_commit(
+            lambda base: {"schema_json": json.loads(merged.json())},
+            prev, None, {},
         )
-        self._write_snapshot(snap, expected_parent=prev.version)

@@ -386,15 +386,13 @@ def test_schema_evolution_additive(spark, feed_df, tmp_path, feed_events):
         with_tool_column=False,
     )
     evolve_at = int(SPEC.n_events * SPEC.evolution_frac)
-    p.run(
-        _feed_for_range(feed_df),
-        SPEC.n_events,
-        batch_size=250,
-        evolve_at_offset=evolve_at,
-        evolved_columns=T.StructType(
-            [T.StructField("tool", T.StringType(), True)]
-        ),
+    feed = _feed_for_range(feed_df)
+    # the batch holding `evolve_at` is the first to see the new column
+    p.run(feed, (evolve_at // 250) * 250, batch_size=250)
+    p.table.evolve_schema_additive(
+        T.StructType([T.StructField("tool", T.StringType(), True)])
     )
+    p.run(feed, SPEC.n_events, batch_size=250)
     df = p.read_table()
     assert "tool" in df.columns
     got = _spark_rows(df)

@@ -547,7 +547,11 @@ def test_commit_refuses_to_clobber_pending_stage(spark, tmp_path):
     stage=True path — a NORMAL commit at the same version silently
     overwrote a pending staged snapshot for a different batch, orphaning
     its data and making the later publish fail with a misleading
-    'parent moved' error. Both paths now refuse."""
+    'parent moved' error. Both paths now refuse, and so do the
+    metadata-only schema evolutions: they leave the staged metadata
+    file byte-identical, so the stage still publishes."""
+    import os
+
     import pytest
 
     from omniparser_spark.lake.table import ConcurrentCommitError
@@ -563,10 +567,24 @@ def test_commit_refuses_to_clobber_pending_stage(spark, tmp_path):
             batch_id=6, max_offset=91,
         )
     # same-batch re-delivery (crash re-apply) is still legal
-    merge_into(
+    staged_v = merge_into(
         t, _batch(spark, [("s", 1, "s1", 5, 90, "I")]),
         batch_id=5, max_offset=90, stage=True,
-    )
+    )["snapshot_version"]
+
+    meta = os.path.join(t.path, "metadata", f"v{staged_v}.metadata.json")
+    with open(meta, "rb") as f:
+        staged_bytes = f.read()
+    with pytest.raises(ConcurrentCommitError, match="pending"):
+        t.evolve_schema_additive(
+            T.StructType([T.StructField("extra", T.StringType(), True)])
+        )
+    with pytest.raises(ConcurrentCommitError, match="pending"):
+        t.evolve_schema_widen({"turn_idx": T.LongType()})
+    with open(meta, "rb") as f:
+        assert f.read() == staged_bytes
+    t.publish(staged_v)
+    assert t.read().filter("conv_id = 's'").count() == 1
 
 
 def test_expiry_preserves_fresh_pending_stage(spark, tmp_path):

@@ -312,7 +312,7 @@ def test_one_durable_write_protocol():
 
 def test_fixed_shape_job_restores_conf(spark):
     """The AQE scope must restore the prior value on exit and on
-    error, and be a no-op when AQE is already off (the grid driver)."""
+    error, and be a no-op when AQE is already off (a nested scope)."""
     from omniparser_spark.lake.table import fixed_shape_job
 
     key = "spark.sql.adaptive.enabled"
